@@ -409,7 +409,7 @@ object Bench {
       cpus: String): (Double, Double, Double) = {
     val nEvents = Tables.events(spark, sfDir).count()
     spark.conf.set("spark.sql.shuffle.partitions",
-      math.min(8, cpus.toInt).toString)
+      graft.streaming.Replay.statePartitions(spark).toString)
 
     // Parity path (file-stream source end to end — no driver in the data
     // path; includes the final result sort).

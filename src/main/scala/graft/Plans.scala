@@ -12,6 +12,10 @@ import java.nio.file.{Files, Paths}
   * without running Spark.
   *
   * Usage: runMain graft.Plans <sfDir> <outDir> [q name,names|all]
+  *
+  * With SPARK_GRAFT_STREAM_PLAN_DIR set, the stream queries that record
+  * their micro-batch plans (StreamParity.PlannedStreams) must leave one
+  * there, or the tool exits non-zero.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
@@ -34,6 +38,12 @@ object Plans {
     // A query that fails to plan must FAIL the tool (ADVICE r13): the
     // committed plans/ evidence must never silently omit an artifact.
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    // Stream queries record their micro-batch plans themselves (see
+    // StreamParity.recordStreamPlan); a missing file is a failure too.
+    val streamPlans = sys.env.get("SPARK_GRAFT_STREAM_PLAN_DIR").toSeq.flatMap(d =>
+      graft.streaming.StreamParity.PlannedStreams.filter(names.contains)
+        .map(n => n -> Paths.get(s"$d/$n.txt")))
+    streamPlans.foreach { case (_, p) => Files.deleteIfExists(p) }
     names.foreach { name =>
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)
@@ -47,6 +57,10 @@ object Plans {
       spark.sharedState.cacheManager.clearCache()
     }
     spark.stop()
+    failed ++= streamPlans.collect { case (n, p) if !Files.exists(p) =>
+      System.err.println(s"[plans] $n left no stream plan at $p")
+      n
+    }
     if (failed.nonEmpty) {
       System.err.println(s"[plans] ${failed.size} queries produced no " +
         s"plan file: ${failed.mkString(",")}")

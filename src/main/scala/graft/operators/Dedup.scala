@@ -230,7 +230,7 @@ object Dedup {
     * (occupancy 32 ≈ 2.1M docs); past it the candidate bound is
     * unmeasured and the provably-exact two-level takes over as the
     * safety valve. */
-  private val SimOccupancy = 32L
+  private[graft] val SimOccupancy = 32L
 
   /** Pigeonhole banding of a (doc_id, simhash) frame.
     *
@@ -817,13 +817,6 @@ object Dedup {
     * index side alone (see prefixRows: any consistent total order is
     * exact), which is precisely the statistic a persistent index can
     * actually maintain without seeing the future. */
-  /** State partition count of the q58 probing stream (Bench's
-    * state-volume-sized pin): the index's df table is laid out in this
-    * many h-hashed, h-sorted cached partitions so the per-trigger
-    * prefix-order join reuses the cache's partitioning+ordering — the
-    * batch side is the ONLY side exchanged per trigger. */
-  private[graft] val ProbePartitions = 8
-
   private[graft] final class NearDupIndex(existing: DataFrame) {
     val docsEx: DataFrame = shingleDocs(existing).cache()
     // df is joined on h every trigger as the preserved-side of a left
@@ -832,9 +825,14 @@ object Dedup {
     // it exchange-free and sort-free (guide §2.4 — two operations keyed
     // the same way share one exchange; here the exchange is paid once
     // at index build).
+    // Laid out at the probing stream's own partition count
+    // (Replay.statePartitions): against a cache at another count, the
+    // per-trigger batch side is shuffled to the cache's width instead.
     val dfreq: DataFrame = docsEx.select(explode(col("hs")).as("h"))
       .groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .repartition(ProbePartitions, col("h")).sortWithinPartitions("h")
+      .repartition(graft.streaming.Replay.statePartitions(existing.sparkSession),
+        col("h"))
+      .sortWithinPartitions("h")
       .cache()
     val prefixesEx: DataFrame = prefixRows(docsEx, dfreq).cache()
 

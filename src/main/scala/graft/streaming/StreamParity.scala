@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -20,20 +19,11 @@ import org.apache.spark.sql.types.{DecimalType, StructType}
   * are the max timestamp (a column-pruned one-row aggregate, needed to
   * place the sentinel) and the final windowed result.
   *
-  * End-of-stream flush: the reference emits `MAX_WATERMARK` on stream
-  * termination so all open windows close
-  * (`rlink/src/runtime/worker/runnable/watermark_assigner_runnable.rs:125-128`).
-  * Spark's append mode has no termination flush, so we replay the same
-  * trick: a one-row sentinel FILE, 1 hour past the last real event, sits
-  * alongside the real table in the streamed directory. After the batch
-  * containing it commits, the watermark passes every real window end and
-  * the engine's no-data micro-batch emits all remaining windows
-  * (`processAllAvailable` blocks until that quiesces). Sentinel-keyed
-  * rows are filtered from the result.
+  * Staging, the end-of-stream sentinel flush, the run itself and
+  * cleanup live in one harness, [[Replay]]; each query below states only
+  * its input, its streaming body and how it reads its result back.
   */
 object StreamParity {
-
-  private val runId = new AtomicInteger(0)
 
   /** Data files per replay (one micro-batch each, plus the sentinel
     * trigger where a query uses one). Two batches is the MINIMUM that
@@ -64,62 +54,30 @@ object StreamParity {
     }
   }
 
-  def q25StreamBatchParity(spark: SparkSession, sfDir: String): DataFrame = {
-    // Raw schema: ts keeps its on-disk type so the sentinel file and the
-    // real table are schema-identical for the file source.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    val schema = raw.schema
-    val sentinelTs = sentinelTsPlus1h(raw)
-
-    // Stream directory: symlink the real table + write the sentinel file.
-    val dir = Files.createTempDirectory("q25_parity")
-    Files.createSymbolicLink(
-      dir.resolve("events.parquet"), Paths.get(s"$sfDir/events.parquet"))
-    val sentinelVals = schema.fields.map { f =>
-      f.name match {
-        case "ts"         => sentinelTs // +1 hour past the last real event
-        case "event_type" => "zzz_sentinel"
-        case "value"      => 0.0
-        case _            => null
-      }
+  def q25StreamBatchParity(spark: SparkSession, sfDir: String): DataFrame =
+    Replay(spark, "q25_parity") { r =>
+      // The real table replays in place (symlinked) in one trigger with
+      // the sentinel; ts keeps its on-disk type so both are schema-identical.
+      val raw = r.events(sfDir)
+      val dir = r.link(s"$sfDir/events.parquet")
+      r.sentinel(dir, raw, "event_type" -> "zzz_sentinel", "value" -> 0.0)
+      val agg = graft.Tables.normalizeTs(r.source(dir, raw.schema, perTrigger = 2))
+        .select(col("ts"), col("event_type"), col("value"))
+        .withWatermark("ts", "1 second")
+        .groupBy(window(col("ts"), "60 seconds", "20 seconds"), col("event_type"))
+        .agg(
+          sum(col("value").cast(DecimalType(25, 6))).cast("double").as("sum_value"),
+          max(col("value")).as("max_value"),
+          min(col("value")).as("min_value"),
+          count(lit(1)).as("cnt"))
+      r.memory(agg)
+        .filter(col("event_type") =!= "zzz_sentinel")
+        .select(
+          col("window.start").cast("long").as("window_start"),
+          col("event_type"), col("sum_value"), col("max_value"),
+          col("min_value"), col("cnt"))
+        .orderBy("window_start", "event_type")
     }
-    val sentinelDir = Files.createTempDirectory("q25_sentinel")
-    spark.createDataFrame(
-        java.util.Arrays.asList(Row(sentinelVals.toIndexedSeq: _*)), schema)
-      .coalesce(1).write.mode("overwrite").parquet(sentinelDir.toString)
-    listDir(sentinelDir).filter(_.toString.endsWith(".parquet"))
-      .foreach(p => Files.copy(p, dir.resolve("zz_sentinel.parquet")))
-
-    val agg = graft.Tables.normalizeTs(
-        spark.readStream.schema(schema).parquet(dir.toString))
-      .select(col("ts"), col("event_type"), col("value"))
-      .withWatermark("ts", "1 second")
-      .groupBy(window(col("ts"), "60 seconds", "20 seconds"), col("event_type"))
-      .agg(
-        sum(col("value").cast(DecimalType(25, 6))).cast("double").as("sum_value"),
-        max(col("value")).as("max_value"),
-        min(col("value")).as("min_value"),
-        count(lit(1)).as("cnt"))
-
-    val table = s"q25_parity_${runId.incrementAndGet()}"
-    val query = agg.writeStream.outputMode("append")
-      .format("memory").queryName(table).start()
-    try query.processAllAvailable()
-    finally {
-      query.stop()
-      deleteRecursively(dir.toFile) // output lives in the memory sink
-      deleteRecursively(sentinelDir.toFile)
-    }
-
-    drainMemorySink(spark, table)
-      .filter(col("event_type") =!= "zzz_sentinel")
-      .select(
-        col("window.start").cast("long").as("window_start"),
-        col("event_type"), col("sum_value"), col("max_value"),
-        col("min_value"), col("cnt"))
-      .orderBy("window_start", "event_type")
-  }
 
   /** q58 — the q52 admission gate through the REAL streaming engine: a
     * continuously-ingesting corpus admits documents batch by batch. The
@@ -170,174 +128,137 @@ object StreamParity {
     * Scale notes: the seen-state table carries (16-byte hash, id); the
     * per-batch near-dup join touches the index via the inverted-index
     * equi-join only; nothing corpus-sized crosses the driver. */
-  def q58StreamAdmission(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.operators.Dedup
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val incoming = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-    val existing = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0).cache()
-    // corpus hash set, laid out like the index's df table: ch-hashed,
-    // ch-sorted cached partitions at the stream's state partition count,
-    // so the per-trigger exact-layer join sorts/shuffles ONLY the batch
-    // side (broadcasting this side would not be corpus-scale-sane)
-    val existingH = existing.select(md5(col("text")).as("ch")).distinct()
-      .withColumn("hit_corpus", lit(true))
-      .repartition(graft.operators.Dedup.ProbePartitions, col("ch"))
-      .sortWithinPartitions("ch").cache()
-    // Build the persistent near-dup index ONCE; every micro-batch only
-    // probes it (shingles/df/prefixes of the 4/5 existing corpus are
-    // computed and cached here, not recomputed per batch).
-    val index = new Dedup.NearDupIndex(existing)
+  def q58StreamAdmission(spark: SparkSession, sfDir: String): DataFrame =
+    Replay(spark, "q58") { r =>
+      import graft.operators.Dedup
+      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+        .select(col("doc_id"), col("text"))
+      val incoming = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
+      val existing = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0).cache()
+      // corpus hash set, laid out like the index's df table: ch-hashed,
+      // ch-sorted cached partitions at the stream's state partition count,
+      // so the per-trigger exact-layer join sorts/shuffles ONLY the batch
+      // side (broadcasting this side would not be corpus-scale-sane)
+      val existingH = existing.select(md5(col("text")).as("ch")).distinct()
+        .withColumn("hit_corpus", lit(true))
+        .repartition(Replay.statePartitions(spark), col("ch"))
+        .sortWithinPartitions("ch").cache()
+      // Build the persistent near-dup index ONCE; every micro-batch only
+      // probes it (shingles/df/prefixes of the 4/5 existing corpus are
+      // computed and cached here, not recomputed per batch).
+      val index = new Dedup.NearDupIndex(existing)
 
-    // Ingest layout: ReplayFiles id-range files, mod-times ascending in range
-    // order, so the file source replays batches in id order.
-    val dir = Files.createTempDirectory("q58_incoming")
-    incoming.repartitionByRange(ReplayFiles, col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .write.mode("overwrite").parquet(dir.toString)
-    val t0 = System.currentTimeMillis() - 3600L * 1000
-    val parts = new java.io.File(dir.toString).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    parts.zipWithIndex.foreach { case (f, i) =>
-      require(f.setLastModified(t0 + i * 10000L)) }
+      val seenSchema = StructType.fromDDL("ch STRING, first_id BIGINT")
+      // Snapshot pointer + idempotence guard + stamp GC live in the shared
+      // StampedLedger (the snapshot pointer tracks the kind=s SUBDIR of
+      // each stamp — the kind=v verdict dirs are tracked separately and
+      // read back after the stream stops).
+      val ledger = r.ledger()
+      val verdictDirs = scala.collection.mutable.ArrayBuffer.empty[String]
 
-    val ioRoot = Files.createTempDirectory("q58_io").toString
-    val seenSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("ch",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("first_id",
-        org.apache.spark.sql.types.LongType)))
-    // Snapshot pointer + idempotence guard + stamp GC live in the shared
-    // StampedLedger (the snapshot pointer tracks the kind=s SUBDIR of
-    // each stamp — the kind=v verdict dirs are tracked separately and
-    // read back after the stream stops).
-    val ledger = new StampedLedger(ioRoot)
-    val verdictDirs = scala.collection.mutable.ArrayBuffer.empty[String]
-
-    val query = withStatePartitions(spark) { spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ledger.guard(batchId) {
-        val s = batch.sparkSession
-        // AQE off for the per-batch jobs (cloned-session conf, set once
-        // per trigger): every AQE query stage runs as its own Spark job,
-        // and this body plans ~20 exchanges/broadcasts over KB-scale
-        // frames — the measured q58 floor was ~30 jobs/trigger of pure
-        // scheduling (AdmissionSweep). Static planning emits ONE job per
-        // action here; the joins that must broadcast carry explicit
-        // hints (NearDupIndex.probe), so nothing depends on AQE's
-        // runtime sizing. Batch volume is micro-batch-scale by
-        // construction, exactly the case static planning handles.
-        s.conf.set("spark.sql.adaptive.enabled", "false")
-        val b = batch.cache()
-        val hashed = b.select(col("doc_id"), md5(col("text")).as("ch"))
-        // The ONLY aggregation this batch runs is over its own rows.
-        val batchMins = hashed.groupBy(col("ch"))
-          .agg(min(col("doc_id")).as("bmin"))
-        val prev = ledger.previous(s, seenSchema)
-          .select(col("ch"), col("first_id").as("pmin"))
-        val firstIds = batchMins.join(prev, Seq("ch"), "left")
-          .select(col("ch"),
-            least(col("bmin"), coalesce(col("pmin"), col("bmin")))
-              .as("first_id"))
-        // explicit build-side hints: with AQE off, the batch-derived
-        // frames have no stats and would otherwise plan sort-merge
-        val exactFlags = hashed
-          .join(existingH, Seq("ch"), "left")
-          .join(broadcast(firstIds), "ch")
-          .select(col("doc_id"),
-            coalesce(col("hit_corpus"), lit(false)).as("exact_corpus"),
-            (col("doc_id") > col("first_id")).as("exact_batch"))
-        val near = index.probe(b)
-          .withColumn("near_corpus", lit(true))
-        val verdicts = exactFlags.join(broadcast(near), Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            when(col("exact_corpus"), "exact_corpus")
-              .when(col("exact_batch"), "exact_batch")
-              .when(coalesce(col("near_corpus"), lit(false)), "near_dup_corpus")
-              .otherwise("admitted").as("verdict"))
-        // Incremental state update: fold the batch minima into the
-        // snapshot (full outer on ch — USING-join coalesces the key),
-        // rewritten compacted. One sequential pass over the snapshot;
-        // the tiny batch side broadcasts.
-        val nextRows = prev.join(batchMins, Seq("ch"), "full")
-          .select(col("ch"),
-            least(coalesce(col("pmin"), col("bmin")),
-              coalesce(col("bmin"), col("pmin"))).as("first_id"))
-        // ONE output job per trigger: verdicts and the rewritten snapshot
-        // union into a single kind-partitioned write (the per-trigger job
-        // count — not task width — is the measured cost floor of this
-        // operator locally; two separate writes paid two job+commit
-        // rounds for two tiny frames). coalesce(1): one file per kind —
-        // these frames are batch/seen-sized, and default-parallelism
-        // writes cost 8+ tasks/files per micro-batch for ~25 rows.
-        val stamp = ledger.stampFor(batchId)
-        val out = verdicts
-          .select(lit("v").as("kind"), col("doc_id"), col("verdict"),
-            lit(null).cast("string").as("ch"),
-            lit(null).cast("long").as("first_id"))
-          .unionByName(nextRows
-            .select(lit("s").as("kind"), lit(null).cast("long").as("doc_id"),
-              lit(null).cast("string").as("verdict"),
-              col("ch"), col("first_id")))
-          .coalesce(1)
-        // per-batch plan evidence (the foreachBatch body is where q58's
-        // joins live; the streaming plan is just the source scan) —
-        // batch 1 is the interesting one: prior state is non-empty
-        if (batchId == 1)
-          sys.env.get("SPARK_GRAFT_STREAM_PLAN_DIR").foreach { d =>
-            java.nio.file.Files.createDirectories(Paths.get(d))
-            java.nio.file.Files.writeString(
-              Paths.get(s"$d/q58_stream_admission.txt"),
-              out.queryExecution.explainString(
-                org.apache.spark.sql.execution.FormattedMode))
+      // The index's and hash set's caches belong to the stream's lifetime,
+      // not the session's — released in finally, also when a batch throws.
+      try {
+        // ingest replays in id order (id-range files)
+        r.foreachBatch(r.source(r.stage(incoming, "doc_id"), docs.schema)) {
+            (batch, batchId) =>
+          ledger.guard(batchId) {
+          val s = batch.sparkSession
+          // AQE off for the per-batch jobs (cloned-session conf, set once
+          // per trigger): every AQE query stage runs as its own Spark job,
+          // and this body plans ~20 exchanges/broadcasts over KB-scale
+          // frames — the measured q58 floor was ~30 jobs/trigger of pure
+          // scheduling (AdmissionSweep). Static planning emits ONE job per
+          // action here; the joins that must broadcast carry explicit
+          // hints (NearDupIndex.probe), so nothing depends on AQE's
+          // runtime sizing. Batch volume is micro-batch-scale by
+          // construction, exactly the case static planning handles.
+          s.conf.set("spark.sql.adaptive.enabled", "false")
+          val b = batch.cache()
+          val hashed = b.select(col("doc_id"), md5(col("text")).as("ch"))
+          // The ONLY aggregation this batch runs is over its own rows.
+          val batchMins = hashed.groupBy(col("ch"))
+            .agg(min(col("doc_id")).as("bmin"))
+          val prev = ledger.previous(s, seenSchema)
+            .select(col("ch"), col("first_id").as("pmin"))
+          val firstIds = batchMins.join(prev, Seq("ch"), "left")
+            .select(col("ch"),
+              least(col("bmin"), coalesce(col("pmin"), col("bmin")))
+                .as("first_id"))
+          // explicit build-side hints: with AQE off, the batch-derived
+          // frames have no stats and would otherwise plan sort-merge
+          val exactFlags = hashed
+            .join(existingH, Seq("ch"), "left")
+            .join(broadcast(firstIds), "ch")
+            .select(col("doc_id"),
+              coalesce(col("hit_corpus"), lit(false)).as("exact_corpus"),
+              (col("doc_id") > col("first_id")).as("exact_batch"))
+          val near = index.probe(b)
+            .withColumn("near_corpus", lit(true))
+          val verdicts = exactFlags.join(broadcast(near), Seq("doc_id"), "left")
+            .select(col("doc_id"),
+              when(col("exact_corpus"), "exact_corpus")
+                .when(col("exact_batch"), "exact_batch")
+                .when(coalesce(col("near_corpus"), lit(false)), "near_dup_corpus")
+                .otherwise("admitted").as("verdict"))
+          // Incremental state update: fold the batch minima into the
+          // snapshot (full outer on ch — USING-join coalesces the key),
+          // rewritten compacted. One sequential pass over the snapshot;
+          // the tiny batch side broadcasts.
+          val nextRows = prev.join(batchMins, Seq("ch"), "full")
+            .select(col("ch"),
+              least(coalesce(col("pmin"), col("bmin")),
+                coalesce(col("bmin"), col("pmin"))).as("first_id"))
+          // ONE output job per trigger: verdicts and the rewritten snapshot
+          // union into a single kind-partitioned write (the per-trigger job
+          // count — not task width — is the measured cost floor of this
+          // operator locally; two separate writes paid two job+commit
+          // rounds for two tiny frames). coalesce(1): one file per kind —
+          // these frames are batch/seen-sized, and default-parallelism
+          // writes cost 8+ tasks/files per micro-batch for ~25 rows.
+          val stamp = ledger.stampFor(batchId)
+          val out = verdicts
+            .select(lit("v").as("kind"), col("doc_id"), col("verdict"),
+              lit(null).cast("string").as("ch"),
+              lit(null).cast("long").as("first_id"))
+            .unionByName(nextRows
+              .select(lit("s").as("kind"), lit(null).cast("long").as("doc_id"),
+                lit(null).cast("string").as("verdict"),
+                col("ch"), col("first_id")))
+            .coalesce(1)
+          // per-batch plan evidence (the foreachBatch body is where q58's
+          // joins live; the streaming plan is just the source scan) — every
+          // batch records, so the last one wins
+          recordStreamPlan("q58_stream_admission",
+            out.queryExecution.explainString(
+              org.apache.spark.sql.execution.FormattedMode))
+          out.write.mode("overwrite").partitionBy("kind").parquet(stamp)
+          verdictDirs += s"$stamp/kind=v"
+          // Advance the snapshot pointer to this stamp's kind=s subdir and
+          // GC the superseded one. An all-empty batch over empty prior
+          // state writes no kind=s subdir (dynamic partitioning emits
+          // nothing for zero rows) — advanceTo leaves the pointer alone,
+          // which is safe: when the new dir is missing, prev state was
+          // necessarily empty too (the full join preserves every prior
+          // row), so retaining it is a no-op defensive choice, not a
+          // state fork.
+          ledger.advanceTo(s"$stamp/kind=s")
+          b.unpersist()
+          ()
           }
-        out.write.mode("overwrite").partitionBy("kind").parquet(stamp)
-        verdictDirs += s"$stamp/kind=v"
-        // Advance the snapshot pointer to this stamp's kind=s subdir and
-        // GC the superseded one. An all-empty batch over empty prior
-        // state writes no kind=s subdir (dynamic partitioning emits
-        // nothing for zero rows) — advanceTo leaves the pointer alone,
-        // which is safe: when the new dir is missing, prev state was
-        // necessarily empty too (the full join preserves every prior
-        // row), so retaining it is a no-op defensive choice, not a
-        // state fork.
-        ledger.advanceTo(s"$stamp/kind=s")
-        b.unpersist()
-        ()
         }
-        ()
+      } finally {
+        index.close()
+        existingH.unpersist()
+        existing.unpersist()
       }
-      .start()
-    } // withStatePartitions: the stream's cloned session snapshots the
-      // pinned conf at start; the outer session is restored here
-    // Cleanup runs in finally: a foreachBatch failure must not leak the
-    // corpus-sized replay/io trees on disk or the index's cached frames
-    // in the session (they'd otherwise pin memory until session end).
-    try {
-      query.processAllAvailable()
-
       // A batch with no admissible rows writes no kind=v subdir — read
-      // only the ones that exist (never the case with this 4-file
-      // layout, but an empty trailing trigger must not fail the read).
-      val existingDirs = verdictDirs.filter(d => new java.io.File(d).isDirectory)
-      // materialize eagerly so the verdict/incoming temp trees can go
-      spark.read.parquet(existingDirs.toSeq: _*)
+      // only the ones that exist (an empty trailing trigger must not fail
+      // the read).
+      spark.read.parquet(verdictDirs.filter(StampedLedger.isDir).toSeq: _*)
         .select(col("doc_id"), col("verdict"))
         .orderBy("doc_id")
-        .localCheckpoint(true)
-    } finally {
-      query.stop()
-      // The persistent index's caches belong to the stream's lifetime,
-      // not the session's — release them now that the stream has stopped.
-      index.close()
-      existingH.unpersist()
-      existing.unpersist()
-      deleteRecursively(dir.toFile)
-      deleteRecursively(new java.io.File(ioRoot))
     }
-  }
 
   /** q71 — SESSION windows through the REAL streaming engine: the q08
     * per-user session aggregation (gap 300 s) streamed as ReplayFiles
@@ -361,72 +282,30 @@ object StreamParity {
     * same salting q31 demonstrates). Output is append-mode — emitted
     * once, on session close, exactly the reference's
     * trigger-on-watermark semantics. */
-  def q71StreamSessions(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    val schema = raw.schema
-    val sentinelTs = sentinelTsPlus1h(raw)
-
-    // ReplayFiles contiguous time-range files, replayed oldest-first.
-    val dir = Files.createTempDirectory("q71_sessions")
-    raw.repartitionByRange(ReplayFiles, col("ts")).sortWithinPartitions("ts")
-      .write.mode("overwrite").parquet(dir.toString)
-    val t0 = System.currentTimeMillis() - 3600L * 1000
-    val parts = new java.io.File(dir.toString).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    parts.zipWithIndex.foreach { case (f, i) =>
-      require(f.setLastModified(t0 + i * 10000L)) }
-
-    // Sentinel: one event 1 h past the last real one, for a user id that
-    // cannot occur (-1) — closes all open sessions once its batch commits.
-    val sentinelVals = schema.fields.map { f =>
-      f.name match {
-        case "ts"      => sentinelTs
-        case "user_id" => -1L
-        case "value"   => 0.0
-        case _         => null
-      }
+  def q71StreamSessions(spark: SparkSession, sfDir: String): DataFrame =
+    Replay(spark, "q71_sessions") { r =>
+      // ReplayFiles contiguous time-range files, replayed oldest-first;
+      // the sentinel's user id (-1) cannot occur.
+      val raw = r.events(sfDir)
+      val dir = r.stage(raw, "ts")
+      r.sentinel(dir, raw, "user_id" -> -1L, "value" -> 0.0)
+      val agg = graft.Tables.normalizeTs(r.source(dir, raw.schema))
+        .select(col("ts"), col("user_id"), col("value"))
+        .withWatermark("ts", "1 second")
+        .groupBy(session_window(col("ts"), "300 seconds"), col("user_id"))
+        .agg(count(lit(1)).as("cnt"),
+          sum(col("value").cast(DecimalType(25, 6))).cast("double").as("sum_value"))
+      // session-window state on the RocksDB provider: the merging-window
+      // state shape (variable-width sessions, state rewritten on merge)
+      // joins the windowed-dedup (q116), transformWithState (q126+), and
+      // stream-stream-join (q82/q83) shapes on the scale backend.
+      r.memory(agg, rocksDB = true)
+        .filter(col("user_id") =!= -1L)
+        .select(
+          col("session_window.start").cast("long").as("session_start"),
+          col("user_id"), col("cnt"), col("sum_value"))
+        .orderBy("user_id", "session_start")
     }
-    val sentinelDir = Files.createTempDirectory("q71_sentinel")
-    spark.createDataFrame(
-        java.util.Arrays.asList(Row(sentinelVals.toIndexedSeq: _*)), schema)
-      .coalesce(1).write.mode("overwrite").parquet(sentinelDir.toString)
-    val sentinelTarget = dir.resolve("zz_sentinel.parquet")
-    listDir(sentinelDir).filter(_.toString.endsWith(".parquet"))
-      .foreach(p => Files.copy(p, sentinelTarget))
-    require(sentinelTarget.toFile.setLastModified(t0 + parts.length * 10000L))
-
-    val agg = graft.Tables.normalizeTs(spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir.toString))
-      .select(col("ts"), col("user_id"), col("value"))
-      .withWatermark("ts", "1 second")
-      .groupBy(session_window(col("ts"), "300 seconds"), col("user_id"))
-      .agg(count(lit(1)).as("cnt"),
-        sum(col("value").cast(DecimalType(25, 6))).cast("double").as("sum_value"))
-
-    val table = s"q71_sessions_${runId.incrementAndGet()}"
-    // session-window state on the RocksDB provider: the merging-window
-    // state shape (variable-width sessions, state rewritten on merge)
-    // joins the windowed-dedup (q116), transformWithState (q126+), and
-    // stream-stream-join (q82/q83) shapes on the scale backend.
-    withRocksDBProvider(spark) {
-      val query = agg.writeStream.outputMode("append")
-        .format("memory").queryName(table).start()
-      try query.processAllAvailable()
-      finally {
-        query.stop()
-        deleteRecursively(dir.toFile) // output lives in the memory sink
-        deleteRecursively(sentinelDir.toFile)
-      }
-    }
-
-    drainMemorySink(spark, table)
-      .filter(col("user_id") =!= -1L)
-      .select(
-        col("session_window.start").cast("long").as("session_start"),
-        col("user_id"), col("cnt"), col("sum_value"))
-      .orderBy("user_id", "session_start")
-  }
 
   /** q49 — streaming exact dedup: the q15 md5-keyed dedup aggregation
     * run through the REAL streaming engine with state carried ACROSS
@@ -443,29 +322,15 @@ object StreamParity {
     * distinct hash), not corpus-sized; a pipeline materializing the kept
     * documents themselves would switch to update mode with a
     * downstream idempotent sink keyed on text_hash. */
-  def q49StreamDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val schema = docs.schema
-    val dir = Files.createTempDirectory("q49_docs")
-    docs.repartition(ReplayFiles).write.mode("overwrite").parquet(dir.toString)
-
-    val agg = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      .groupBy(md5(col("text")).as("text_hash"))
-      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
-      .select(col("keep_id"), col("n_copies"))
-
-    val table = s"q49_dedup_${runId.incrementAndGet()}"
-    val query = withStatePartitions(spark) { agg.writeStream.outputMode("complete")
-      .format("memory").queryName(table).start() }
-    try query.processAllAvailable()
-    finally {
-      query.stop()
-      deleteRecursively(dir.toFile) // output lives in the memory sink
+  def q49StreamDedup(spark: SparkSession, sfDir: String): DataFrame =
+    Replay(spark, "q49_dedup") { r =>
+      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      val agg = r.source(r.stage(docs), docs.schema)
+        .groupBy(md5(col("text")).as("text_hash"))
+        .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
+        .select(col("keep_id"), col("n_copies"))
+      r.memory(agg, "complete").orderBy("keep_id")
     }
-
-    drainMemorySink(spark, table).orderBy("keep_id")
-  }
 
   /** q231 — streaming vector-index ingest: the ANN family's LIVE path.
     * q30 builds its IVF index with a one-shot batch scan; a production
@@ -485,32 +350,24 @@ object StreamParity {
     * array with an index tiebreak); index writes are batchId-stamped
     * overwrite dirs (exactly-once under at-least-once retries). Driver
     * state: the K-row codebook only. */
-  def q231StreamIvfIngest(spark: SparkSession, sfDir: String): DataFrame = {
-    val K = 8
-    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    // offline codebook: K-row collect, bounded by K (codebook-sized, the
-    // TrainSampleCap discipline)
-    val cents: Seq[Seq[Double]] = e.orderBy("vec_id").limit(K).collect()
-      .map(_.getSeq[Float](1).map(_.toDouble).toSeq).toSeq
-
-    val dir = Files.createTempDirectory("q231_vecs")
-    e.repartitionByRange(ReplayFiles, col("vec_id"))
-      .sortWithinPartitions("vec_id")
-      .write.mode("overwrite").parquet(dir.toString)
-    val outRoot = Files.createTempDirectory("q231_idx").toString
-
-    val schema = spark.read.parquet(dir.toString).schema
-    val query = withStatePartitions(spark) { spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.functions.GraftFunctions.{centroidScores, dot}
+  def q231StreamIvfIngest(spark: SparkSession, sfDir: String): DataFrame =
+    Replay(spark, "q231") { r =>
+      import graft.functions.GraftFunctions.{centroidScores, dot}
+      val K = 8
+      val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
+        .select(col("vec_id"), col("embedding"))
+      // offline codebook: K-row collect, bounded by K (codebook-sized, the
+      // TrainSampleCap discipline); its scoring Column — and the codebook
+      // broadcast inside it — is built once for the whole stream
+      val cents: Seq[Seq[Double]] = e.orderBy("vec_id").limit(K).collect()
+        .map(_.getSeq[Float](1).map(_.toDouble).toSeq).toSeq
+      val scores = centroidScores(col("embedding"), col("norm"), cents)
+      val outRoot = r.dir("idx")
+      r.foreachBatch(r.source(r.stage(e, "vec_id"), e.schema)) { (batch, batchId) =>
         batch
           .withColumn("norm",
             sqrt(dot(col("embedding"), col("embedding"))))
-          .withColumn("sc",
-            centroidScores(col("embedding"), col("norm"), cents))
+          .withColumn("sc", scores)
           // argmax with the LOWEST cell winning ties: struct compare is
           // (s, nc) lexicographic, so negating the index flips the tie
           .withColumn("pick",
@@ -519,19 +376,9 @@ object StreamParity {
             (-col("pick.nc")).cast("long").as("cell"),
             col("pick.s").as("score"))
           .write.mode("overwrite").parquet(s"$outRoot/b$batchId")
-        ()
-      }.start() }
-    try query.processAllAvailable()
-    finally {
-      query.stop()
-      deleteRecursively(dir.toFile)
+      }
+      spark.read.parquet(s"$outRoot/b*").orderBy("vec_id")
     }
-
-    val out = spark.read.parquet(s"$outRoot/b*").orderBy("vec_id")
-      .localCheckpoint(true)
-    deleteRecursively(new java.io.File(outRoot))
-    out
-  }
 
   /** DuckDB argmax over the IDENTICAL double arithmetic: score =
     * dot(v, cent) / |v| with the K smallest-id vectors as the codebook,
@@ -612,23 +459,13 @@ object StreamParity {
     * batchId-stamped overwrite dirs (exactly-once under foreachBatch's
     * at-least-once contract, the q58/q148 discipline) — never a corpus
     * re-scan. */
-  def q233StreamMediaAdmission(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"),
-        length(encode(col("text"), "utf-8")).cast("long").as("nb"))
-    val dir = Files.createTempDirectory("q233_docs")
-    docs.repartitionByRange(ReplayFiles, col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .write.mode("overwrite").parquet(dir.toString)
-
-    val outRoot = Files.createTempDirectory("q233_ledger").toString
-    val ledger = new StampedLedger(outRoot)
-
-    val schema = spark.read.parquet(dir.toString).schema
-    val query = withStatePartitions(spark) { spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+  def q233StreamMediaAdmission(spark: SparkSession, sfDir: String): DataFrame =
+    Replay(spark, "q233") { r =>
+      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+        .select(col("doc_id"),
+          length(encode(col("text"), "utf-8")).cast("long").as("nb"))
+      val ledger = r.ledger()
+      r.foreachBatch(r.source(r.stage(docs, "doc_id"), docs.schema)) { (batch, batchId) =>
         ledger.fold(batchId) { stamp =>
           val s = batch.sparkSession
           val batchLedger = mediaAdmissionLedger(batch)
@@ -643,20 +480,9 @@ object StreamParity {
           }
           folded.write.mode("overwrite").parquet(stamp)
         }
-        ()
-      }.start() }
-    try query.processAllAvailable()
-    finally {
-      query.stop()
-      deleteRecursively(dir.toFile)
+      }
+      r.read(ledger).orderBy("sample_rate")
     }
-    val out = ledger.previousPath.map(p => spark.read.parquet(p))
-      .getOrElse(sys.error("q233: no ledger written"))
-      .orderBy("sample_rate").localCheckpoint(true)
-    ledger.close()
-    deleteRecursively(new java.io.File(outRoot)) // the (now empty) root
-    out
-  }
 
   /** Batch one-shot equivalent of q233's folded ledger (ParitySpec pins
     * streamed == batch — the fold is exact because every stat merges). */
@@ -709,32 +535,16 @@ object StreamParity {
     * per-doc outputs land in batchId-stamped overwrite dirs (exactly-
     * once under foreachBatch's at-least-once contract, the q58/q148
     * discipline). Snapshot versions are GC'd batch-to-batch. */
-  def q227StreamBlockAdmission(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.operators.Dedup.BlockB
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val dir = Files.createTempDirectory("q227_docs")
-    docs.repartitionByRange(ReplayFiles, col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .write.mode("overwrite").parquet(dir.toString)
-    val t0 = System.currentTimeMillis() - 3600L * 1000
-    new java.io.File(dir.toString).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .zipWithIndex.foreach { case (f, i) =>
-        require(f.setLastModified(t0 + i * 10000L)) }
+  def q227StreamBlockAdmission(spark: SparkSession, sfDir: String): DataFrame =
+    Replay(spark, "q227") { r =>
+      import graft.operators.Dedup.BlockB
+      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+        .select(col("doc_id"), col("text"))
+      val ledger = r.ledger()
+      val outRoot = r.dir("out")
+      val idxSchema = StructType.fromDDL("bh BINARY")
 
-    val idxRoot = Files.createTempDirectory("q227_idx").toString
-    val outRoot = Files.createTempDirectory("q227_out").toString
-    val ledger = new StampedLedger(idxRoot)
-    val idxSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("bh",
-        org.apache.spark.sql.types.BinaryType)))
-
-    val schema = spark.read.parquet(dir.toString).schema
-    val query = withStatePartitions(spark) { spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      r.foreachBatch(r.source(r.stage(docs, "doc_id"), docs.schema)) { (batch, batchId) =>
         ledger.guard(batchId) {
           val s = batch.sparkSession
           val blocks = batch
@@ -772,21 +582,9 @@ object StreamParity {
             ()
           } finally { blocks.unpersist(); () }
         }
-        ()
-      }.start() }
-    try query.processAllAvailable()
-    finally {
-      query.stop()
-      deleteRecursively(dir.toFile)
+      }
+      spark.read.parquet(s"$outRoot/b*").orderBy("doc_id")
     }
-
-    val out = spark.read.parquet(s"$outRoot/b*").orderBy("doc_id")
-      .localCheckpoint(true)
-    deleteRecursively(new java.io.File(outRoot))
-    ledger.close()
-    deleteRecursively(new java.io.File(idxRoot)) // the (now empty) root
-    out
-  }
 
   /** q66 — heavy hitters over a CONTINUOUSLY INGESTING corpus: q61's
     * Misra-Gries sketch-then-verify gate through the streaming engine.
@@ -814,32 +612,27 @@ object StreamParity {
     * sketch operator — this extends its windowed-reduce family
     * (`rlink/src/api/function.rs` ReduceFunction) with the mergeable-
     * summary shape that unbounded-vocabulary streams need. */
-  def q66StreamHeavyHitters(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    import graft.operators.TextAnalysis.HhK
+  def q66StreamHeavyHitters(spark: SparkSession, sfDir: String): DataFrame =
+    Replay(spark, "q66") { r =>
+      import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+      import graft.operators.TextAnalysis.HhK
 
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val schema = docs.schema
-    val dir = Files.createTempDirectory("q66_docs")
-    docs.repartition(ReplayFiles).write.mode("overwrite").parquet(dir.toString)
+      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      val mgSketch = udaf(new graft.functions.MisraGriesSketch(HhK),
+        ExpressionEncoder[String]())
+      val merger = new graft.functions.MisraGries(HhK)
+      val running = scala.collection.mutable.HashMap.empty[String, Long]
+      var nTokens = 0L
 
-    val mgSketch = udaf(new graft.functions.MisraGriesSketch(HhK),
-      ExpressionEncoder[String]())
-    val merger = new graft.functions.MisraGries(HhK)
-    val running = scala.collection.mutable.HashMap.empty[String, Long]
-    var nTokens = 0L
-
-    // foreachBatch is AT-LEAST-ONCE: a retried/re-executed trigger
-    // re-delivers the same batchId, and a second fold of the same batch
-    // into the driver-local accumulator silently corrupts the summary.
-    // The shared ledger's guard makes the fold idempotent (guard-only
-    // use: the MG sketch lives on the driver, no parquet state).
-    val ledger = new StampedLedger()
-    val toks = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      .select(explode(split(lower(trim(col("text"))), " +")).as("tok"))
-    val query = withStatePartitions(spark) { toks.writeStream.outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      // foreachBatch is AT-LEAST-ONCE: a retried/re-executed trigger
+      // re-delivers the same batchId, and a second fold of the same batch
+      // into the driver-local accumulator silently corrupts the summary.
+      // The shared ledger's guard makes the fold idempotent (guard-only
+      // use: the MG sketch lives on the driver, no parquet state).
+      val ledger = new StampedLedger()
+      val toks = r.source(r.stage(docs), docs.schema)
+        .select(explode(split(lower(trim(col("text"))), " +")).as("tok"))
+      r.foreachBatch(toks) { (batch, batchId) =>
         ledger.guard(batchId) {
           val row = batch.agg(mgSketch(col("tok")).as("sketch"),
             count(lit(1)).as("n")).head()
@@ -851,24 +644,18 @@ object StreamParity {
           merger.merge(running, batchSketch)
           nTokens += row.getLong(1)
         }
-        ()
-      }.start() }
-    try query.processAllAvailable()
-    finally {
-      query.stop()
-      deleteRecursively(dir.toFile) // sketch lives on the driver
-    }
+      }
 
-    // exact verification of the k-bounded candidate set (q61's gate)
-    import spark.implicits._
-    val cands = running.keys.toSeq.sorted.toDF("tok")
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(explode(split(lower(trim(col("text"))), " +")).as("tok"))
-      .join(broadcast(cands), "tok")
-      .groupBy(col("tok")).agg(count(lit(1)).as("freq"))
-      .filter(col("freq") > lit(nTokens.toDouble / HhK))
-      .orderBy("tok")
-  }
+      // exact verification of the k-bounded candidate set (q61's gate)
+      import spark.implicits._
+      val cands = running.keys.toSeq.sorted.toDF("tok")
+      spark.read.parquet(s"$sfDir/documents.parquet")
+        .select(explode(split(lower(trim(col("text"))), " +")).as("tok"))
+        .join(broadcast(cands), "tok")
+        .groupBy(col("tok")).agg(count(lit(1)).as("freq"))
+        .filter(col("freq") > lit(nTokens.toDouble / HhK))
+        .orderBy("tok")
+    }
 
   /** q212 — the AMS F2 / self-join-size sketch (q210) maintained over a
     * CONTINUOUSLY INGESTING table: the Tug-of-War counters are LINEAR
@@ -885,20 +672,15 @@ object StreamParity {
     * The md5-derived signs are q210's, so linearity makes the folded
     * Z bit-equal to the single-shot Z, estimate included — asserted by
     * the streamed-equals-batch spec. */
-  def q212StreamAmsF2(spark: SparkSession, sfDir: String): DataFrame = {
-    val keys = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .select(col("l_partkey"))
-    val dir = Files.createTempDirectory("q212_ams")
-    keys.repartition(ReplayFiles).write.mode("overwrite").parquet(dir.toString)
-
-    val z = Array.fill(32)(0L)
-    // idempotent fold under foreachBatch's at-least-once contract
-    // (shared guard-only ledger — driver-side Z accumulator)
-    val ledger = new StampedLedger()
-    val stream = spark.readStream.schema(keys.schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-    val query = withStatePartitions(spark) { stream.writeStream.outputMode("update")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
+  def q212StreamAmsF2(spark: SparkSession, sfDir: String): DataFrame =
+    Replay(spark, "q212") { r =>
+      val keys = spark.read.parquet(s"$sfDir/lineitem.parquet")
+        .select(col("l_partkey"))
+      val z = Array.fill(32)(0L)
+      // idempotent fold under foreachBatch's at-least-once contract
+      // (shared guard-only ledger — driver-side Z accumulator)
+      val ledger = new StampedLedger()
+      r.foreachBatch(r.source(r.stage(keys), keys.schema)) { (batch, batchId) =>
         ledger.guard(batchId) {
         batch.groupBy(col("l_partkey")).agg(count(lit(1)).as("f"))
           .select(explode(expr("sequence(1, 32)")).as("j"), col("l_partkey"),
@@ -911,29 +693,23 @@ object StreamParity {
           .collect()
           .foreach(r => z(r.getInt(0) - 1) += r.getLong(1))
         }
-        ()
-      }.start() }
-    try query.processAllAvailable()
-    finally {
-      query.stop()
-      deleteRecursively(dir.toFile) // sketch lives on the driver
-    }
+      }
 
-    // q210's exact side + the identical integer median-of-means
-    val ex = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .groupBy(col("l_partkey")).agg(count(lit(1)).as("f"))
-      .agg(count(lit(1)).as("n_keys"), sum(col("f")).as("n_rows"),
-        sum(expr("f * f")).as("exact_f2"))
-      .head()
-    val means = z.map(v => v * v).grouped(8).map(_.sum / 8).toSeq.sorted
-    val est = (means(1) + means(2)) / 2
-    val (nKeys, nRows, exactF2) =
-      (ex.getLong(0), ex.getLong(1), ex.getLong(2))
-    import spark.implicits._
-    Seq((nKeys, nRows, exactF2, est,
-        1000000L * math.abs(est - exactF2) / exactF2))
-      .toDF("n_keys", "n_rows", "exact_f2", "est_f2", "err_ppm")
-  }
+      // q210's exact side + the identical integer median-of-means
+      val ex = spark.read.parquet(s"$sfDir/lineitem.parquet")
+        .groupBy(col("l_partkey")).agg(count(lit(1)).as("f"))
+        .agg(count(lit(1)).as("n_keys"), sum(col("f")).as("n_rows"),
+          sum(expr("f * f")).as("exact_f2"))
+        .head()
+      val means = z.map(v => v * v).grouped(8).map(_.sum / 8).toSeq.sorted
+      val est = (means(1) + means(2)) / 2
+      val (nKeys, nRows, exactF2) =
+        (ex.getLong(0), ex.getLong(1), ex.getLong(2))
+      import spark.implicits._
+      Seq((nKeys, nRows, exactF2, est,
+          1000000L * math.abs(est - exactF2) / exactF2))
+        .toDF("n_keys", "n_rows", "exact_f2", "est_f2", "err_ppm")
+    }
 
   /** q218 — weighted sampling WITHOUT replacement over a CONTINUOUSLY
     * INGESTING corpus: q200's Efraimidis–Spirakis A-ES keys are
@@ -946,21 +722,16 @@ object StreamParity {
     * q200 and held to its oracle — the third mergeable-summary fold
     * after q66 (MG) and q212 (AMS), covering SAMPLING: a live pipeline
     * maintains its eval sample while data streams in, no re-scan. */
-  def q218StreamSample(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("n_chars"))
-    val dir = Files.createTempDirectory("q218_sample")
-    docs.repartition(ReplayFiles).write.mode("overwrite").parquet(dir.toString)
-
-    val K = 100
-    var running = Vector.empty[(Long, Long, Double)] // (doc_id, w, es_key)
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-    // idempotent fold under foreachBatch's at-least-once contract
-    // (shared guard-only ledger — driver-side top-K accumulator)
-    val ledger = new StampedLedger()
-    val query = withStatePartitions(spark) { stream.writeStream.outputMode("update")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
+  def q218StreamSample(spark: SparkSession, sfDir: String): DataFrame =
+    Replay(spark, "q218") { r =>
+      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+        .select(col("doc_id"), col("n_chars"))
+      val K = 100
+      var running = Vector.empty[(Long, Long, Double)] // (doc_id, w, es_key)
+      // idempotent fold under foreachBatch's at-least-once contract
+      // (shared guard-only ledger — driver-side top-K accumulator)
+      val ledger = new StampedLedger()
+      r.foreachBatch(r.source(r.stage(docs), docs.schema)) { (batch, batchId) =>
         ledger.guard(batchId) {
         val top = batch.where("n_chars > 0").selectExpr(
             "doc_id", "n_chars AS w",
@@ -971,17 +742,11 @@ object StreamParity {
         running = (running ++ top)
           .sortBy { case (id, _, k) => (-k, id) }.take(K)
         }
-        ()
-      }.start() }
-    try query.processAllAvailable()
-    finally {
-      query.stop()
-      deleteRecursively(dir.toFile) // sample lives on the driver
+      }
+      import spark.implicits._
+      running.toDF("doc_id", "w", "es_key").orderBy(col("es_key").desc,
+        col("doc_id"))
     }
-    import spark.implicits._
-    running.toDF("doc_id", "w", "es_key").orderBy(col("es_key").desc,
-      col("doc_id"))
-  }
 
   /** q221 — the KMV bottom-k distinct sketch (q203) maintained over a
     * CONTINUOUSLY INGESTING corpus: bottom-k order statistics are
@@ -996,37 +761,32 @@ object StreamParity {
     * End-of-stream the sketch is bit-equal to the single-shot q203
     * (estimate, k-th statistic, and measured error included) and held
     * to its oracle; the exact side computes in q203's batch shape. */
-  def q221StreamKmv(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val dir = Files.createTempDirectory("q221_kmv")
-    docs.repartition(ReplayFiles).write.mode("overwrite").parquet(dir.toString)
+  def q221StreamKmv(spark: SparkSession, sfDir: String): DataFrame =
+    Replay(spark, "q221") { r =>
+      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+        .select(col("doc_id"), col("text"))
+      val K = 256
+      val uExpr = "(CAST(conv(substring(md5(g), 1, 12), 16, 10) AS DOUBLE)" +
+        " + 1.0D) / 281474976710657.0D"
+      def shingles(df: DataFrame) = df
+        .select(split(trim(col("text")), " +").as("toks"))
+        .filter(size(col("toks")) >= 3)
+        .select(explode(expr(
+          """transform(sequence(0, size(toks) - 3),
+            |  i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2]))""".stripMargin))
+          .as("g"))
+        .distinct()
 
-    val K = 256
-    val uExpr = "(CAST(conv(substring(md5(g), 1, 12), 16, 10) AS DOUBLE)" +
-      " + 1.0D) / 281474976710657.0D"
-    def shingles(df: org.apache.spark.sql.DataFrame) = df
-      .select(split(trim(col("text")), " +").as("toks"))
-      .filter(size(col("toks")) >= 3)
-      .select(explode(expr(
-        """transform(sequence(0, size(toks) - 3),
-          |  i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2]))""".stripMargin))
-        .as("g"))
-      .distinct()
-
-    // State is keyed by the GRAM, not its hash: the same gram seen in
-    // two batches must merge to one entry (the batch DISTINCT), while
-    // two different grams that collide on u must keep their
-    // multiplicity — a value-keyed fold would collapse them and shift
-    // the k-th order statistic.
-    var running = Map.empty[String, Double]
-    // idempotent fold under foreachBatch's at-least-once contract
-    // (shared guard-only ledger — driver-side KMV accumulator)
-    val ledger = new StampedLedger()
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-    val query = withStatePartitions(spark) { stream.writeStream.outputMode("update")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
+      // State is keyed by the GRAM, not its hash: the same gram seen in
+      // two batches must merge to one entry (the batch DISTINCT), while
+      // two different grams that collide on u must keep their
+      // multiplicity — a value-keyed fold would collapse them and shift
+      // the k-th order statistic.
+      var running = Map.empty[String, Double]
+      // idempotent fold under foreachBatch's at-least-once contract
+      // (shared guard-only ledger — driver-side KMV accumulator)
+      val ledger = new StampedLedger()
+      r.foreachBatch(r.source(r.stage(docs), docs.schema)) { (batch, batchId) =>
         ledger.guard(batchId) {
           val top = shingles(batch).selectExpr("g", s"$uExpr AS u")
             .orderBy(col("u"), col("g")).limit(K)
@@ -1034,26 +794,20 @@ object StreamParity {
           running = (running ++ top).toSeq
             .sortBy { case (g, u) => (u, g) }.take(K).toMap
         }
-        ()
-      }.start() }
-    try query.processAllAvailable()
-    finally {
-      query.stop()
-      deleteRecursively(dir.toFile) // sketch lives on the driver
-    }
+      }
 
-    val us = running.values.toSeq.sorted
-    val (uk, kk) = (us.last, us.size.toLong)
-    val nExact = shingles(spark.read.parquet(s"$sfDir/documents.parquet"))
-      .count()
-    import spark.implicits._
-    Seq((kk, uk, nExact))
-      .toDF("kk", "uk", "n_exact")
-      .selectExpr("kk AS k", "ROUND(uk, 9) AS kth_u",
-        "CAST(FLOOR((kk - 1) / uk) AS BIGINT) AS est_distinct", "n_exact",
-        "ROUND(ABS((kk - 1) / uk - CAST(n_exact AS DOUBLE)) / n_exact, 6)" +
-          " AS rel_err")
-  }
+      val us = running.values.toSeq.sorted
+      val (uk, kk) = (us.last, us.size.toLong)
+      val nExact = shingles(spark.read.parquet(s"$sfDir/documents.parquet"))
+        .count()
+      import spark.implicits._
+      Seq((kk, uk, nExact))
+        .toDF("kk", "uk", "n_exact")
+        .selectExpr("kk AS k", "ROUND(uk, 9) AS kth_u",
+          "CAST(FLOOR((kk - 1) / uk) AS BIGINT) AS est_distinct", "n_exact",
+          "ROUND(ABS((kk - 1) / uk - CAST(n_exact AS DOUBLE)) / n_exact, 6)" +
+            " AS rel_err")
+    }
 
   /** q81 — the timeline-anomaly monitor through the streaming engine:
     * q78's per-type z-score over the dense hour grid, maintained
@@ -1072,41 +826,20 @@ object StreamParity {
     * O(batch) aggregation + a grid-sized fold; the anomaly pass runs on
     * demand over metadata-sized state. Snapshot versions are GC'd
     * batch-to-batch. */
-  def q81StreamAnomaly(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.operators.Relational
-    // raw schema read: nanos generations reject without the legacy conf
-    // (see Tables.scala:26) — every events reader must set it itself or
-    // break when it runs FIRST in a fresh session
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    val dir = Files.createTempDirectory("q81_events")
-    raw.repartitionByRange(ReplayFiles, col("ts")).sortWithinPartitions("ts")
-      .write.mode("overwrite").parquet(dir.toString)
-    val t0 = System.currentTimeMillis() - 3600L * 1000
-    val parts = new java.io.File(dir.toString).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    parts.zipWithIndex.foreach { case (f, i) =>
-      require(f.setLastModified(t0 + i * 10000L)) }
+  def q81StreamAnomaly(spark: SparkSession, sfDir: String): DataFrame =
+    Replay(spark, "q81") { r =>
+      import graft.operators.Relational
+      val raw = r.events(sfDir)
+      // Shared fold discipline — this copy had drifted: it lacked the
+      // batchId idempotence guard, and the counts-add fold is NOT
+      // idempotent under foreachBatch's at-least-once retries (a retried
+      // trigger would double-count its batch into the already-advanced
+      // snapshot). The ledger's guard closes that hole.
+      val ledger = r.ledger()
+      val snapSchema = StructType.fromDDL("ws BIGINT, et STRING, cnt BIGINT")
 
-    val snapRoot = Files.createTempDirectory("q81_snap").toString
-    // Shared fold discipline — this copy had drifted: it lacked the
-    // batchId idempotence guard, and the counts-add fold is NOT
-    // idempotent under foreachBatch's at-least-once retries (a retried
-    // trigger would double-count its batch into the already-advanced
-    // snapshot). The ledger's guard closes that hole.
-    val ledger = new StampedLedger(snapRoot)
-    val snapSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("ws",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("et",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("cnt",
-        org.apache.spark.sql.types.LongType)))
-
-    val query = withStatePartitions(spark) { graft.Tables.normalizeTs(spark.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir.toString))
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      val stream = graft.Tables.normalizeTs(r.source(r.stage(raw, "ts"), raw.schema))
+      r.foreachBatch(stream) { (batch, batchId) =>
         ledger.fold(batchId) { stamp =>
           val s = batch.sparkSession
           // The ONLY aggregation is over the batch's own rows.
@@ -1125,46 +858,123 @@ object StreamParity {
                 .as("cnt"))
           next.write.mode("overwrite").parquet(stamp)
         }
-        ()
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start() }
-    try query.awaitTermination()
-    finally query.stop()
 
-    // Dense grid + z from the final grid-sized snapshot (q75's shape,
-    // then q78's exact double sequence — same expression tokens).
-    val agg = spark.read.parquet(ledger.previousPath.get).cache()
-    val bounds = agg.agg(min(col("ws")).as("lo"), max(col("ws")).as("hi"))
-    val types = agg.select(col("et").as("event_type")).distinct()
-    val grid = bounds
-      .select(explode(sequence(col("lo"), col("hi"), lit(3600L))).as("window_start"))
-      .crossJoin(broadcast(types))
-    val cells = grid.join(broadcast(agg),
-        grid("window_start") === agg("ws") && grid("event_type") === agg("et"),
-        "left")
-      .select(col("window_start"), col("event_type"),
-        coalesce(col("cnt"), lit(0L)).as("cnt"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("event_type"))
-    val out = cells
-      .withColumn("s1", sum(col("cnt")).over(w))
-      .withColumn("s2", sum(col("cnt") * col("cnt")).over(w))
-      .withColumn("n", count(lit(1)).over(w))
-      .withColumn("mean", col("s1").cast("double") / col("n"))
-      .withColumn("sd", sqrt(
-        (col("s2").cast("double") - col("s1").cast("double")
-          * col("s1").cast("double") / col("n")) / (col("n") - 1)))
-      .withColumn("z", (col("cnt").cast("double") - col("mean")) / col("sd"))
-      .filter(abs(col("z")) >= Relational.ZThresh)
-      .select(col("window_start"), col("event_type"), col("cnt"),
-        col("mean"), col("z"))
-      .orderBy("window_start", "event_type")
-      .localCheckpoint(true) // sever lineage to the temp snapshot parquet
-    agg.unpersist()
-    deleteRecursively(dir.toFile)
-    deleteRecursively(new java.io.File(snapRoot))
-    out
-  }
+      // Dense grid + z from the final grid-sized snapshot (q75's shape,
+      // then q78's exact double sequence — same expression tokens).
+      val agg = r.read(ledger)
+      val bounds = agg.agg(min(col("ws")).as("lo"), max(col("ws")).as("hi"))
+      val types = agg.select(col("et").as("event_type")).distinct()
+      val grid = bounds
+        .select(explode(sequence(col("lo"), col("hi"), lit(3600L))).as("window_start"))
+        .crossJoin(broadcast(types))
+      val cells = grid.join(broadcast(agg),
+          grid("window_start") === agg("ws") && grid("event_type") === agg("et"),
+          "left")
+        .select(col("window_start"), col("event_type"),
+          coalesce(col("cnt"), lit(0L)).as("cnt"))
+      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("event_type"))
+      cells
+        .withColumn("s1", sum(col("cnt")).over(w))
+        .withColumn("s2", sum(col("cnt") * col("cnt")).over(w))
+        .withColumn("n", count(lit(1)).over(w))
+        .withColumn("mean", col("s1").cast("double") / col("n"))
+        .withColumn("sd", sqrt(
+          (col("s2").cast("double") - col("s1").cast("double")
+            * col("s1").cast("double") / col("n")) / (col("n") - 1)))
+        .withColumn("z", (col("cnt").cast("double") - col("mean")) / col("sd"))
+        .filter(abs(col("z")) >= Relational.ZThresh)
+        .select(col("window_start"), col("event_type"), col("cnt"),
+          col("mean"), col("z"))
+        .orderBy("window_start", "event_type")
+    }
+
+  /** Shared replay inputs for the q82/q83 stream-stream interval joins:
+    * one (purchase, click) directory pair per sfDir, each side
+    * range-partitioned into 4 time-ordered files plus the q83
+    * end-of-stream sentinel (impossible user −1, one hour past the last
+    * event). Both queries read the same pair: the left join NEEDS the
+    * sentinel to flush its unmatched tail, and the inner join is immune
+    * to it (user −1 matches only the other sentinel; a guard filter
+    * drops that one pair). Built ONCE per (JVM, sfDir) — q82 and q83
+    * previously each wrote both corpus-sized replay sides independently,
+    * four writes per bench run; sharing halves the harness setup, which
+    * dominated the two queries' board cost. Dirs are removed by a JVM
+    * shutdown hook (they must outlive both queries and the specs). */
+  private val q8xDirs =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+
+  private def q8xSideDirs(spark: SparkSession, sfDir: String): (String, String) =
+    q8xDirs.computeIfAbsent(sfDir, { _ =>
+      val r = Replay.untilExit(spark, "q8x")
+      val raw = r.events(sfDir)
+      def sideDir(etype: String): String = {
+        // Deliberately NOT ReplayFiles: 4 data files + sentinel at
+        // maxFilesPerTrigger=3 already replay in 2 triggers/side (the
+        // same per-trigger minimum), while keeping the finer time-range
+        // layout the dual-source watermark-alignment story exercises.
+        val d = r.stage(raw.filter(col("event_type") === etype), "ts", files = 4)
+        r.sentinel(d, raw, "user_id" -> -1L, "event_type" -> etype, "value" -> 0.0)
+        d
+      }
+      (sideDir("purchase"), sideDir("click"))
+    })
+
+  /** Last captured micro-batch plan per query name — the spec surface
+    * for stateful-operator-count assertions (a streaming query's
+    * DECLARED DataFrame is the drained sink, i.e. a trivial plan). */
+  private[graft] val lastStreamPlans =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** Queries that leave a plan in [[lastStreamPlans]] on every run —
+    * `graft.Plans` requires their plan files. */
+  private[graft] val PlannedStreams =
+    Seq("q58_stream_admission", "q106_stream_observe", "q116_stream_distinct")
+
+  /** Record a micro-batch plan into [[lastStreamPlans]] (a later record
+    * of the same name wins), and, when SPARK_GRAFT_STREAM_PLAN_DIR is
+    * set, also write it to `<dir>/<name>.txt` for the committed plans/
+    * artifacts. Exception-safe: evidence capture must never fail the
+    * query (`graft.Plans` fails on the missing file instead). */
+  private[streaming] def recordStreamPlan(name: String, plan: => String): Unit =
+    try {
+      val text = plan
+      lastStreamPlans.put(name, text)
+      sys.env.get("SPARK_GRAFT_STREAM_PLAN_DIR").foreach { d =>
+        Files.createDirectories(Paths.get(d))
+        Files.writeString(Paths.get(s"$d/$name.txt"), text)
+      }
+    } catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[streamplan] $name failed: ${e.getMessage}")
+    }
+
+  /** Record the query's last executed micro-batch plan (the plan that
+    * shows the stateful-operator count) through [[recordStreamPlan]]. */
+  private[streaming] def dumpStreamPlan(name: String,
+      query: org.apache.spark.sql.streaming.StreamingQuery): Unit =
+    recordStreamPlan(name, {
+      val bos = new java.io.ByteArrayOutputStream()
+      Console.withOut(new java.io.PrintStream(bos, true, "UTF-8")) {
+        query.explain(extended = false)
+      }
+      new String(bos.toByteArray, "UTF-8")
+    })
+
+  /** One side of the q82/q83 join as a live file stream. Three files
+    * per trigger (the 5 time-ordered files replay in 2 micro-batches
+    * plus the engine's final no-data flush batch): the join semantics
+    * depend on the watermark ADVANCING across batches, not on any
+    * particular batch granularity — rows grouped into one trigger join
+    * against state exactly as they would across two — and each trigger
+    * pays a full per-partition state-store commit cycle, so the batch
+    * count is the fixed-cost knob (the r08 5-trigger replay put these
+    * two queries at 15% of the whole board). */
+  private def q8xSide(r: Replay, schema: StructType,
+      dir: String, prefix: String): DataFrame =
+    graft.Tables.normalizeTs(r.source(dir, schema, perTrigger = 3))
+      .select(col("event_id").as(s"${prefix}_id"),
+        col("ts").as(s"${prefix}_ts"), col("user_id").as(s"${prefix}_user"))
+      .withWatermark(s"${prefix}_ts", "1 second")
 
   /** q82 — stream-stream interval join: click→purchase attribution
     * (every click by the same user in the 24 h window before a
@@ -1187,193 +997,23 @@ object StreamParity {
     * ingest rate per side — the exact knob the reference's CoProcess
     * user must hand-manage with keyed state + timers; skewed users ride
     * the same salting story as q31. */
-  /** Shared replay inputs for the q82/q83 stream-stream interval joins:
-    * one (purchase, click) directory pair per sfDir, each side
-    * range-partitioned into 4 time-ordered files plus the q83
-    * end-of-stream sentinel (impossible user −1, one hour past the last
-    * event). Both queries read the same pair: the left join NEEDS the
-    * sentinel to flush its unmatched tail, and the inner join is immune
-    * to it (user −1 matches only the other sentinel; a guard filter
-    * drops that one pair). Built ONCE per (JVM, sfDir) — q82 and q83
-    * previously each wrote both corpus-sized replay sides independently,
-    * four writes per bench run; sharing halves the harness setup, which
-    * dominated the two queries' board cost. Dirs are removed by a JVM
-    * shutdown hook (they must outlive both queries and the specs). */
-  private val q8xDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  private def q8xSideDirs(spark: SparkSession, sfDir: String): (String, String) =
-    q8xDirs.computeIfAbsent(sfDir, { _ =>
-      // legacy conf before the raw read: this loader must survive running
-      // FIRST in a fresh session on a nanos testdata generation
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$sfDir/events.parquet")
-      val sentinelTs = sentinelTsPlus1h(raw)
-      def sideDir(etype: String): String = {
-        val d = Files.createTempDirectory(s"q8x_$etype")
-        // Deliberately NOT ReplayFiles: 4 data files + sentinel at
-        // maxFilesPerTrigger=3 already replay in 2 triggers/side (the
-        // same per-trigger minimum), while keeping the finer time-range
-        // layout the dual-source watermark-alignment story exercises.
-        raw.filter(col("event_type") === etype)
-          .repartitionByRange(4, col("ts")).sortWithinPartitions("ts")
-          .write.mode("overwrite").parquet(d.toString)
-        val t0 = System.currentTimeMillis() - 3600L * 1000
-        val parts = new java.io.File(d.toString).listFiles()
-          .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-        parts.zipWithIndex.foreach { case (f, i) =>
-          require(f.setLastModified(t0 + i * 10000L)) }
-        val sentinelVals = raw.schema.fields.map { f =>
-          f.name match {
-            case "ts"         => sentinelTs
-            case "user_id"    => -1L
-            case "event_type" => etype
-            case "value"      => 0.0
-            case _            => null
-          }
-        }
-        val tmp = Files.createTempDirectory(s"q8x_${etype}_sent")
-        spark.createDataFrame(
-            java.util.Arrays.asList(Row(sentinelVals.toIndexedSeq: _*)),
-            raw.schema)
-          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val dst = Paths.get(d.toString).resolve("zz_sentinel.parquet")
-        listDir(tmp).filter(_.toString.endsWith(".parquet"))
-          .foreach(p => Files.copy(p, dst))
-        deleteRecursively(tmp.toFile)
-        require(dst.toFile.setLastModified(t0 + parts.length * 10000L))
-        d.toString
-      }
-      val p = sideDir("purchase")
-      val c = sideDir("click")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        deleteRecursively(new java.io.File(p))
-        deleteRecursively(new java.io.File(c))
-      }))
-      (p, c)
-    })
-
-  /** Run `body` with the RocksDB state-store provider — the 100 TB
-    * state backend (state lives off-heap/on-disk per executor instead
-    * of on the JVM heap) — restoring the previous provider after.
-    * q116 proved the provider on windowed-dedup state and replayTyped
-    * runs every transformWithState query on it; q82/q83 extended it to
-    * stream-stream JOIN state, and round 10 flipped q71 (session
-    * windows), q94 (flatMapGroupsWithState), and q123 (dedup-within-
-    * watermark) — every stateful shape in the suite now exercises the
-    * scale backend.
-    *
-    * Also pins the state partition count to 8 for the query: a
-    * stream-stream join opens FOUR state stores per partition per
-    * trigger, so at the bench session's 16-32 shuffle partitions the
-    * per-trigger RocksDB instance churn (128+ opens/commits per
-    * trigger) dominated the queries' cost — the same
-    * partitions-sized-to-state-volume-not-core-count tradeoff Bench
-    * documents for the parity/ingest paths (measured here: 6.2 -> 4.6 s
-    * warm per query at sf0.1 going 16 -> 8). */
-  private def withRocksDBProvider[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try withStatePartitions(spark)(body)
-    finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None    => spark.conf.unset(key)
+  def q82StreamIntervalJoin(spark: SparkSession, sfDir: String): DataFrame =
+    Replay(spark, "q82_attrib") { r =>
+      val raw = r.events(sfDir)
+      val (purchDir, clickDir) = q8xSideDirs(spark, sfDir)
+      val joined = q8xSide(r, raw.schema, purchDir, "p")
+        .join(q8xSide(r, raw.schema, clickDir, "c"),
+          col("p_user") === col("c_user") &&
+            col("c_ts") >= col("p_ts") - expr("INTERVAL 86400 SECONDS") &&
+            col("c_ts") <= col("p_ts"))
+      r.memory(joined, rocksDB = true)
+        .filter(col("p_user") =!= -1L) // shared-harness sentinel pair
+        .select(col("p_id").as("purchase_id"), col("c_id").as("click_id"),
+          col("p_user").as("user_id"),
+          (unix_micros(col("p_ts")) - unix_micros(col("c_ts")))
+            .cast("long").as("lag_us"))
+        .orderBy("purchase_id", "click_id")
     }
-  }
-
-  /** Pin `shuffle.partitions` to min(8, session) for a stream's
-    * lifetime (start through stop) and restore it after: stateful
-    * queries pay a per-partition state-store commit every micro-batch
-    * and the foreachBatch queries pay per-task scheduling on every
-    * per-batch exchange, while the state/batch volume here is KB-scale
-    * — partitions are sized to STATE VOLUME, not core count (the r13
-    * AdmissionSweep measurement behind [[withRocksDBProvider]]'s pin,
-    * now shared by the stream queries that keep the default HDFS
-    * provider). Batch queries still run at $SPARK_GRAFT_CPUS
-    * partitions; min(8, prev) keeps a lower-core driver run
-    * (SPARK_GRAFT_CPUS < 8) meaningful. */
-  private def withStatePartitions[T](spark: SparkSession)(body: => T): T = {
-    val pkey = "spark.sql.shuffle.partitions"
-    val prevParts = spark.conf.get(pkey)
-    spark.conf.set(pkey, math.min(8, prevParts.toInt).toString)
-    try body
-    finally spark.conf.set(pkey, prevParts)
-  }
-
-  /** Last captured micro-batch plan per query name — the spec surface
-    * for stateful-operator-count assertions (a streaming query's
-    * DECLARED DataFrame is the drained sink, i.e. a trivial plan). */
-  private[graft] val lastStreamPlans =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Plan evidence for streaming queries: capture the query's last
-    * executed micro-batch plan (the plan that shows the stateful-
-    * operator count) into [[lastStreamPlans]], and, when
-    * SPARK_GRAFT_STREAM_PLAN_DIR is set, also write it to
-    * `<dir>/<name>.txt` for the committed plans/ artifacts.
-    * Exception-safe: evidence capture must never fail the query. */
-  private[streaming] def dumpStreamPlan(name: String,
-      query: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    try {
-      val bos = new java.io.ByteArrayOutputStream()
-      Console.withOut(new java.io.PrintStream(bos, true, "UTF-8")) {
-        query.explain(extended = false)
-      }
-      lastStreamPlans.put(name, new String(bos.toByteArray, "UTF-8"))
-      sys.env.get("SPARK_GRAFT_STREAM_PLAN_DIR").foreach { d =>
-        Files.createDirectories(Paths.get(d))
-        Files.write(Paths.get(s"$d/$name.txt"), bos.toByteArray)
-        ()
-      }
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[streamplan] $name failed: ${e.getMessage}")
-    }
-
-  /** One side of the q82/q83 join as a live file stream. Three files
-    * per trigger (the 5 time-ordered files replay in 2 micro-batches
-    * plus the engine's final no-data flush batch): the join semantics
-    * depend on the watermark ADVANCING across batches, not on any
-    * particular batch granularity — rows grouped into one trigger join
-    * against state exactly as they would across two — and each trigger
-    * pays a full per-partition state-store commit cycle, so the batch
-    * count is the fixed-cost knob (the r08 5-trigger replay put these
-    * two queries at 15% of the whole board). */
-  private def q8xSide(spark: SparkSession, schema: StructType,
-      dir: String, prefix: String): DataFrame =
-    graft.Tables.normalizeTs(spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "3").parquet(dir))
-      .select(col("event_id").as(s"${prefix}_id"),
-        col("ts").as(s"${prefix}_ts"), col("user_id").as(s"${prefix}_user"))
-      .withWatermark(s"${prefix}_ts", "1 second")
-
-  def q82StreamIntervalJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    val (purchDir, clickDir) = q8xSideDirs(spark, sfDir)
-
-    val joined = q8xSide(spark, raw.schema, purchDir, "p")
-      .join(q8xSide(spark, raw.schema, clickDir, "c"),
-        col("p_user") === col("c_user") &&
-          col("c_ts") >= col("p_ts") - expr("INTERVAL 86400 SECONDS") &&
-          col("c_ts") <= col("p_ts"))
-
-    val table = s"q82_attrib_${runId.incrementAndGet()}"
-    withRocksDBProvider(spark) {
-      val query = joined.writeStream.outputMode("append")
-        .format("memory").queryName(table).start()
-      try query.processAllAvailable()
-      finally query.stop()
-    }
-
-    drainMemorySink(spark, table)
-      .filter(col("p_user") =!= -1L) // shared-harness sentinel pair
-      .select(col("p_id").as("purchase_id"), col("c_id").as("click_id"),
-        col("p_user").as("user_id"),
-        (unix_micros(col("p_ts")) - unix_micros(col("c_ts")))
-          .cast("long").as("lag_us"))
-      .orderBy("purchase_id", "click_id")
-  }
 
   val q82Sql: String =
     """WITH e AS (
@@ -1404,39 +1044,30 @@ object StreamParity {
     *
     * Held to a direct DuckDB LEFT JOIN oracle. Same state bounds as
     * q82; the null-extended tail costs one sentinel row of state. */
-  def q83StreamLeftJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    // Shared q8x replay pair. BOTH sides carry the sentinel: the global
-    // watermark is the MIN across sources, so without a purchase-side
-    // sentinel the last real purchases sit below the global watermark
-    // forever and their unmatched rows never flush (the purchase
-    // sentinel itself emits as a user −1 row — dropped by the guard).
-    val (purchDir, clickDir) = q8xSideDirs(spark, sfDir)
-
-    val joined = q8xSide(spark, raw.schema, purchDir, "p")
-      .join(q8xSide(spark, raw.schema, clickDir, "c"),
-        col("p_user") === col("c_user") &&
-          col("c_ts") >= col("p_ts") - expr("INTERVAL 86400 SECONDS") &&
-          col("c_ts") <= col("p_ts"),
-        "leftOuter")
-
-    val table = s"q83_attrib_${runId.incrementAndGet()}"
-    withRocksDBProvider(spark) {
-      val query = joined.writeStream.outputMode("append")
-        .format("memory").queryName(table).start()
-      try query.processAllAvailable()
-      finally query.stop()
+  def q83StreamLeftJoin(spark: SparkSession, sfDir: String): DataFrame =
+    Replay(spark, "q83_attrib") { r =>
+      val raw = r.events(sfDir)
+      // Shared q8x replay pair. BOTH sides carry the sentinel: the global
+      // watermark is the MIN across sources, so without a purchase-side
+      // sentinel the last real purchases sit below the global watermark
+      // forever and their unmatched rows never flush (the purchase
+      // sentinel itself emits as a user −1 row — dropped by the guard).
+      val (purchDir, clickDir) = q8xSideDirs(spark, sfDir)
+      val joined = q8xSide(r, raw.schema, purchDir, "p")
+        .join(q8xSide(r, raw.schema, clickDir, "c"),
+          col("p_user") === col("c_user") &&
+            col("c_ts") >= col("p_ts") - expr("INTERVAL 86400 SECONDS") &&
+            col("c_ts") <= col("p_ts"),
+          "leftOuter")
+      r.memory(joined, rocksDB = true)
+        .filter(col("p_user") =!= -1L) // drop nothing real; guard only
+        .select(col("p_id").as("purchase_id"),
+          col("c_id").as("click_id"), // null when unattributed
+          col("p_user").as("user_id"),
+          (unix_micros(col("p_ts")) - unix_micros(col("c_ts")))
+            .cast("long").as("lag_us"))
+        .orderBy("purchase_id", "click_id")
     }
-
-    drainMemorySink(spark, table)
-      .filter(col("p_user") =!= -1L) // drop nothing real; guard only
-      .select(col("p_id").as("purchase_id"),
-        col("c_id").as("click_id"), // null when unattributed
-        col("p_user").as("user_id"),
-        (unix_micros(col("p_ts")) - unix_micros(col("c_ts")))
-          .cast("long").as("lag_us"))
-      .orderBy("purchase_id", "click_id")
-  }
 
   val q83Sql: String =
     """WITH e AS (
@@ -1476,44 +1107,28 @@ object StreamParity {
     * pass, and a production deployment swaps the rewrite for a Delta
     * MERGE / keyed state store exactly as q58 documents. Snapshot
     * versions are GC'd batch-to-batch (O(base) temp, not O(batches)). */
-  def q80StreamCdcMerge(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.operators.Relational.dsum
-    val orders = spark.read.parquet(s"$sfDir/orders.parquet")
-    val base = orders
-      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
-        lit(0).as("version"), lit(false).as("deleted"))
-    val updates = orders
-      .filter(pmod(col("o_orderkey"), lit(7)) === 0)
-      .select(col("o_orderkey"),
-        lit("U").as("o_orderstatus"),
-        (col("o_totalprice") + 10.0).as("o_totalprice"),
-        lit(1).as("version"),
-        (pmod(col("o_orderkey"), lit(11)) === 0).as("deleted"))
+  def q80StreamCdcMerge(spark: SparkSession, sfDir: String): DataFrame =
+    Replay(spark, "q80") { r =>
+      import graft.operators.Relational.dsum
+      val orders = spark.read.parquet(s"$sfDir/orders.parquet")
+      val base = orders
+        .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
+          lit(0).as("version"), lit(false).as("deleted"))
+      val updates = orders
+        .filter(pmod(col("o_orderkey"), lit(7)) === 0)
+        .select(col("o_orderkey"),
+          lit("U").as("o_orderstatus"),
+          (col("o_totalprice") + 10.0).as("o_totalprice"),
+          lit(1).as("version"),
+          (pmod(col("o_orderkey"), lit(11)) === 0).as("deleted"))
 
-    // Feed layout: base as trigger 0, changes as trigger 1.
-    val dir = Files.createTempDirectory("q80_feed")
-    val t0 = System.currentTimeMillis() - 3600L * 1000
-    Seq(base, updates).zipWithIndex.foreach { case (df, i) =>
-      val tmp = Files.createTempDirectory(s"q80_part$i")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      listDir(tmp).filter(_.toString.endsWith(".parquet")).foreach { p =>
-        val dst = dir.resolve(f"f$i%02d.parquet")
-        Files.copy(p, dst)
-        require(dst.toFile.setLastModified(t0 + i * 10000L))
-      }
-      deleteRecursively(tmp.toFile) // staging copy, already in the feed
-    }
-
-    val snapRoot = Files.createTempDirectory("q80_snap").toString
-    // Shared fold discipline (this copy had also drifted guard-less;
-    // the version-desc keep-first merge happens to be re-fold-idempotent,
-    // but the guard costs nothing and keeps every site uniform).
-    val ledger = new StampedLedger(snapRoot)
-
-    val query = withStatePartitions(spark) { spark.readStream.schema(base.schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      // Shared fold discipline (this copy had also drifted guard-less;
+      // the version-desc keep-first merge happens to be re-fold-idempotent,
+      // but the guard costs nothing and keeps every site uniform).
+      val ledger = r.ledger()
+      // Feed layout: base as trigger 0, changes as trigger 1.
+      r.foreachBatch(r.source(r.stageFrames(base, updates), base.schema)) {
+          (batch, batchId) =>
         ledger.fold(batchId) { stamp =>
           val s = batch.sparkSession
           val prev = ledger.previous(s, base.schema)
@@ -1524,24 +1139,14 @@ object StreamParity {
             .filter(col("rn") === 1).drop("rn")
           next.write.mode("overwrite").parquet(stamp)
         }
-        ()
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start() }
-    try query.awaitTermination()
-    finally query.stop()
 
-    val merged = spark.read.parquet(ledger.previousPath.get)
-      .filter(!col("deleted"))
-    val out = merged.groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n_orders"),
-        dsum(col("o_totalprice")).as("total_price"))
-      .orderBy("o_orderstatus")
-      .localCheckpoint(true) // sever lineage to the temp snapshot parquet
-    deleteRecursively(dir.toFile)
-    deleteRecursively(new java.io.File(snapRoot))
-    out
-  }
+      r.read(ledger).filter(!col("deleted"))
+        .groupBy(col("o_orderstatus"))
+        .agg(count(lit(1)).as("n_orders"),
+          dsum(col("o_totalprice")).as("total_price"))
+        .orderBy("o_orderstatus")
+    }
 
   /** Per-event input to the q94 funnel state machine. `ts` carries the
     * watermark tag (event-time timeouts require the watermarked column to
@@ -1587,113 +1192,72 @@ object StreamParity {
     * clicks bounded to the 24 h window (eagerly evicted); the shuffle is
     * keyed on user_id. Timeout-driven emission means the sink sees one
     * row per user, not per trigger. */
-  def q94StreamFunnel(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import spark.implicits._
+  def q94StreamFunnel(spark: SparkSession, sfDir: String): DataFrame =
+    Replay(spark, "q94_funnel") { r =>
+      import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+      import spark.implicits._
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    val schema = raw.schema
-    val sentinelTs = sentinelTsPlus1h(raw)
+      val raw = r.events(sfDir)
+      val dir = r.stage(raw, "ts")
+      r.sentinel(dir, raw, "user_id" -> -1L, "event_id" -> -1L,
+        "event_type" -> "zzz_sentinel", "value" -> 0.0)
+      val windowUs = 24L * 3600 * 1000000
 
-    val dir = Files.createTempDirectory("q94_funnel")
-    raw.repartitionByRange(ReplayFiles, col("ts")).sortWithinPartitions("ts")
-      .write.mode("overwrite").parquet(dir.toString)
-    val t0 = System.currentTimeMillis() - 3600L * 1000
-    val parts = new java.io.File(dir.toString).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    parts.zipWithIndex.foreach { case (f, i) =>
-      require(f.setLastModified(t0 + i * 10000L)) }
+      val ev = graft.Tables.normalizeTs(r.source(dir, raw.schema))
+        .withWatermark("ts", "1 second")
+        .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("ts_us"),
+          col("event_id"), col("event_type").as("etype"))
+        .as[FunnelEv]
 
-    val sentinelVals = schema.fields.map { f =>
-      f.name match {
-        case "ts"         => sentinelTs
-        case "user_id"    => -1L
-        case "event_id"   => -1L
-        case "event_type" => "zzz_sentinel"
-        case "value"      => 0.0
-        case _            => null
-      }
-    }
-    val sentinelDir = Files.createTempDirectory("q94_sentinel")
-    spark.createDataFrame(
-        java.util.Arrays.asList(Row(sentinelVals.toIndexedSeq: _*)), schema)
-      .coalesce(1).write.mode("overwrite").parquet(sentinelDir.toString)
-    val sentinelTarget = dir.resolve("zz_sentinel.parquet")
-    listDir(sentinelDir).filter(_.toString.endsWith(".parquet"))
-      .foreach(p => Files.copy(p, sentinelTarget))
-    require(sentinelTarget.toFile.setLastModified(t0 + parts.length * 10000L))
-
-    val windowUs = 24L * 3600 * 1000000
-
-    val ev = graft.Tables.normalizeTs(spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir.toString))
-      .withWatermark("ts", "1 second")
-      .select(col("user_id"), col("ts"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"), col("event_type").as("etype"))
-      .as[FunnelEv]
-
-    val out = ev.groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, FunnelOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[FunnelEv], state: GroupState[FunnelState]) =>
-          if (state.hasTimedOut) {
-            // end of stream for this user: emit the final row once
-            val s = state.get
-            state.remove()
-            if (s.nClicks > 0)
-              Iterator.single(FunnelOut(uid, s.nClicks, s.nConv,
-                if (s.nConv > 0) Some(s.sumGap) else None))
-            else Iterator.empty
-          } else {
-            var s = state.getOption.getOrElse(
-              FunnelState(Nil, 0L, 0L, 0L, Long.MinValue))
-            // within-trigger order; cross-trigger order comes from the
-            // time-range replay (same (ts, event_id) order as the oracle)
-            rows.toArray.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-              e.etype match {
-                case "click" =>
-                  s = s.copy(pending = e.ts_us :: s.pending,
-                    nClicks = s.nClicks + 1)
-                case "purchase" =>
-                  // first purchase after each pending click resolves it
-                  val conv = s.pending.filter(c => e.ts_us - c <= windowUs)
-                  s = s.copy(pending = Nil,
-                    nConv = s.nConv + conv.length,
-                    sumGap = s.sumGap + conv.map(e.ts_us - _).sum)
-                case _ => ()
+      val out = ev.groupByKey(_.user_id)
+        .flatMapGroupsWithState[FunnelState, FunnelOut](
+          OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+          (uid: Long, rows: Iterator[FunnelEv], state: GroupState[FunnelState]) =>
+            if (state.hasTimedOut) {
+              // end of stream for this user: emit the final row once
+              val s = state.get
+              state.remove()
+              if (s.nClicks > 0)
+                Iterator.single(FunnelOut(uid, s.nClicks, s.nConv,
+                  if (s.nConv > 0) Some(s.sumGap) else None))
+              else Iterator.empty
+            } else {
+              var s = state.getOption.getOrElse(
+                FunnelState(Nil, 0L, 0L, 0L, Long.MinValue))
+              // within-trigger order; cross-trigger order comes from the
+              // time-range replay (same (ts, event_id) order as the oracle)
+              rows.toArray.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
+                e.etype match {
+                  case "click" =>
+                    s = s.copy(pending = e.ts_us :: s.pending,
+                      nClicks = s.nClicks + 1)
+                  case "purchase" =>
+                    // first purchase after each pending click resolves it
+                    val conv = s.pending.filter(c => e.ts_us - c <= windowUs)
+                    s = s.copy(pending = Nil,
+                      nConv = s.nConv + conv.length,
+                      sumGap = s.sumGap + conv.map(e.ts_us - _).sum)
+                  case _ => ()
+                }
+                if (e.ts_us > s.maxTsUs) s = s.copy(maxTsUs = e.ts_us)
+                // evict clicks that can no longer convert within 24 h
+                s = s.copy(pending =
+                  s.pending.filter(c => s.maxTsUs - c <= windowUs))
               }
-              if (e.ts_us > s.maxTsUs) s = s.copy(maxTsUs = e.ts_us)
-              // evict clicks that can no longer convert within 24 h
-              s = s.copy(pending =
-                s.pending.filter(c => s.maxTsUs - c <= windowUs))
+              state.update(s)
+              // fire once the watermark passes this user's newest event
+              state.setTimeoutTimestamp(s.maxTsUs / 1000 + 1)
+              Iterator.empty
             }
-            state.update(s)
-            // fire once the watermark passes this user's newest event
-            state.setTimeoutTimestamp(s.maxTsUs / 1000 + 1)
-            Iterator.empty
-          }
-      }
+        }
 
-    val table = s"q94_funnel_${runId.incrementAndGet()}"
-    // flatMapGroupsWithState user-defined state (case-class encoder +
-    // event-time timeouts) on the RocksDB provider — the arbitrary-state
-    // shape joins the other stateful shapes on the scale backend.
-    withRocksDBProvider(spark) {
-      val query = out.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(table).start()
-      try query.processAllAvailable()
-      finally {
-        query.stop()
-        deleteRecursively(dir.toFile) // output lives in the memory sink
-        deleteRecursively(sentinelDir.toFile)
-      }
+      // flatMapGroupsWithState user-defined state (case-class encoder +
+      // event-time timeouts) on the RocksDB provider — the arbitrary-state
+      // shape joins the other stateful shapes on the scale backend.
+      r.memory(out, rocksDB = true)
+        .filter(col("user_id") =!= -1L)
+        .orderBy("user_id")
     }
-
-    drainMemorySink(spark, table)
-      .filter(col("user_id") =!= -1L)
-      .orderBy("user_id")
-  }
 
   /** Per-batch observed quality metrics captured by q106's listener,
     * exposed for the spec: query name -> folded counters. */
@@ -1725,78 +1289,67 @@ object StreamParity {
     * poll bound is a column-pruned one-row count, same class as the
     * sentinel placement in q25.
     */
-  def q106StreamObserveQuality(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.operators.Observability
-    val ev = graft.Tables.events(spark, sfDir)
-    val schema = ev.schema
-    val nExpected = ev.count() // poll bound: all rows must fold
-    val dir = Files.createTempDirectory("q106_events")
-    ev.repartition(ReplayFiles).write.mode("overwrite").parquet(dir.toString)
+  def q106StreamObserveQuality(spark: SparkSession, sfDir: String): DataFrame =
+    Replay(spark, "q106_quality") { r =>
+      import graft.operators.Observability
+      val ev = graft.Tables.events(spark, sfDir)
+      val nExpected = ev.count() // poll bound: all rows must fold
 
-    val aggs = Observability.rules.map { case (name, pred) =>
-      sum(when(pred, 1L).otherwise(0L)).as(name)
-    } :+ count(lit(1)).as("n_rows")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      .observe("graft_quality_stream", aggs.head, aggs.tail: _*)
+      val aggs = Observability.rules.map { case (name, pred) =>
+        sum(when(pred, 1L).otherwise(0L)).as(name)
+      } :+ count(lit(1)).as("n_rows")
+      val stream = r.source(r.stage(ev), ev.schema)
+        .observe("graft_quality_stream", aggs.head, aggs.tail: _*)
 
-    val table = s"q106_quality_${runId.incrementAndGet()}"
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit = {
-        val m = e.progress.observedMetrics.get("graft_quality_stream")
-        if (m != null) {
-          val delta = m.schema.fieldNames
-            .map(f => f -> m.getAs[Long](f)).toMap
-          observedFold.merge(table, delta,
-            (a, b) => a.map { case (k, v) => k -> (v + b.getOrElse(k, 0L)) })
+      val key = s"q106_quality_${System.nanoTime()}"
+      val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+        import org.apache.spark.sql.streaming.StreamingQueryListener._
+        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+        override def onQueryProgress(e: QueryProgressEvent): Unit = {
+          val m = e.progress.observedMetrics.get("graft_quality_stream")
+          if (m != null) {
+            val delta = m.schema.fieldNames
+              .map(f => f -> m.getAs[Long](f)).toMap
+            observedFold.merge(key, delta,
+              (a, b) => a.map { case (k, v) => k -> (v + b.getOrElse(k, 0L)) })
+          }
         }
       }
-    }
-    // One live fold per run id family: the spec reads the LATEST run,
-    // so prior runs' counter maps are dead weight in the session-long
-    // ConcurrentHashMap — drop them before this run registers.
-    observedFold.keySet.removeIf(k => k.startsWith("q106_quality_"))
-    spark.streams.addListener(listener)
-    // removeListener runs in finally: a leaked listener would stay on
-    // the SHARED session forever, folding every future q106 run's
-    // progress events into this stale key.
-    try {
-      // noop sink: the stream's only job is to run every row through
-      // the observe node — no state store, no shuffle, no sink buffer.
-      val query = stream.writeStream.outputMode("append")
-        .format("noop").start()
+      // One live fold per run id family: the spec reads the LATEST run,
+      // so prior runs' counter maps are dead weight in the session-long
+      // ConcurrentHashMap — drop them before this run registers.
+      observedFold.keySet.removeIf(k => k.startsWith("q106_quality_"))
+      spark.streams.addListener(listener)
+      // removeListener runs in finally: a leaked listener would stay on
+      // the SHARED session forever, folding every future q106 run's
+      // progress events into this stale key.
       try {
-        query.processAllAvailable()
-        dumpStreamPlan("q106_stream_observe", query)
-      } finally {
-        query.stop()
-        deleteRecursively(dir.toFile) // output lives in the fold
-      }
-      // progress events arrive on an async bus: poll until the listener
-      // has folded every processed row (bounded — the events were all
-      // committed before processAllAvailable returned), then REQUIRE
-      // completeness: the fold is the result now, so an incomplete fold
-      // must fail loudly, never return short counts.
-      val deadline = System.currentTimeMillis + 10000
-      while (System.currentTimeMillis < deadline &&
-          observedFold.getOrDefault(table, Map.empty)
-            .getOrElse("n_rows", -1L) != nExpected)
-        Thread.sleep(50)
-      val fold = observedFold.getOrDefault(table, Map.empty)
-      require(fold.getOrElse("n_rows", -1L) == nExpected,
-        s"observe fold incomplete: ${fold.getOrElse("n_rows", -1L)}" +
-          s" of $nExpected rows")
-      import spark.implicits._
-      Observability.rules.map(_._1).map(r => (r, fold(r), nExpected))
-        .toDF("rule", "n_bad", "n_rows")
-        .withColumn("bad_frac",
-          round(col("n_bad").cast("double") / col("n_rows"), 9))
-        .orderBy("rule")
-    } finally spark.streams.removeListener(listener)
-  }
+        // noop sink: the stream's only job is to run every row through
+        // the observe node — no state store, no shuffle, no sink buffer.
+        r.noop(stream, plan = "q106_stream_observe")
+        // progress events arrive on an async bus: poll until the listener
+        // has folded every processed row (bounded — the events were all
+        // committed before the run returned), then REQUIRE
+        // completeness: the fold is the result now, so an incomplete fold
+        // must fail loudly, never return short counts.
+        val deadline = System.currentTimeMillis + 10000
+        while (System.currentTimeMillis < deadline &&
+            observedFold.getOrDefault(key, Map.empty)
+              .getOrElse("n_rows", -1L) != nExpected)
+          Thread.sleep(50)
+        val fold = observedFold.getOrDefault(key, Map.empty)
+        require(fold.getOrElse("n_rows", -1L) == nExpected,
+          s"observe fold incomplete: ${fold.getOrElse("n_rows", -1L)}" +
+            s" of $nExpected rows")
+        import spark.implicits._
+        Observability.rules.map(_._1).map(r => (r, fold(r), nExpected))
+          .toDF("rule", "n_bad", "n_rows")
+          .withColumn("bad_frac",
+            round(col("n_bad").cast("double") / col("n_rows"), 9))
+          .orderBy("rule")
+      } finally spark.streams.removeListener(listener)
+    }
 
   /** q116 — q110's sliding-window exact distinct through ONE stateful
     * streaming aggregation: windowed state dedups (window, user) pairs
@@ -1816,82 +1369,46 @@ object StreamParity {
     * held). The q25 sentinel closes all real windows at end of stream.
     * State cost: open-window distinct pairs, watermark-bounded.
     */
-  def q116StreamSlidingDistinct(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    val schema = raw.schema
-    val sentinelTs = sentinelTsPlus1h(raw)
-    val realMaxSec = graft.Tables.events(spark, sfDir)
-      .agg(max(unix_timestamp(col("ts")))).head().getLong(0)
+  def q116StreamSlidingDistinct(spark: SparkSession, sfDir: String): DataFrame =
+    Replay(spark, "q116_distinct") { r =>
+      val raw = r.events(sfDir)
+      val realMaxSec = graft.Tables.events(spark, sfDir)
+        .agg(max(unix_timestamp(col("ts")))).head().getLong(0)
+      // the real table replays in place with the sentinel, one trigger
+      val dir = r.link(s"$sfDir/events.parquet")
+      r.sentinel(dir, raw, "user_id" -> -1L, "value" -> 0.0)
+      val pairs = graft.Tables.normalizeTs(r.source(dir, raw.schema, perTrigger = 2))
+        .select(col("ts"), col("user_id"))
+        .withWatermark("ts", "1 second")
+        .groupBy(window(col("ts"), "60 seconds", "20 seconds"), col("user_id"))
+        .agg(count(lit(1)).as("n"))
 
-    val dir = Files.createTempDirectory("q116_distinct")
-    Files.createSymbolicLink(
-      dir.resolve("events.parquet"), Paths.get(s"$sfDir/events.parquet"))
-    val sentinelVals = schema.fields.map { f =>
-      f.name match {
-        case "ts"      => sentinelTs
-        case "user_id" => -1L
-        case "value"   => 0.0
-        case _         => null
+      // Per-batch finish: count each closing window's flushed pairs with a
+      // BATCH aggregation (see the operator doc above for why this is
+      // exact). Keyed by batchId so a replayed/retried batch overwrites
+      // its own rows instead of double-counting; the collected frames are
+      // output-sized (one row per closed window), the same rows the
+      // memory sink used to buffer.
+      val batches =
+        new java.util.concurrent.ConcurrentHashMap[Long, Array[Row]]()
+      r.foreachBatch(pairs, plan = "q116_stream_distinct") { (batch, batchId) =>
+        val rows = batch.groupBy(col("window"))
+          .agg(count(lit(1)).as("n_users"), sum(col("n")).as("n_events"))
+          .select(col("window.start").cast("long").as("window_start"),
+            col("n_users"), col("n_events"))
+          .collect()
+        batches.put(batchId, rows)
+        ()
       }
+
+      import scala.jdk.CollectionConverters._
+      val outSchema =
+        StructType.fromDDL("window_start BIGINT, n_users BIGINT, n_events BIGINT")
+      spark.createDataFrame(
+          batches.values.asScala.flatten.toSeq.asJava, outSchema)
+        .filter(col("window_start") <= realMaxSec) // drop sentinel windows
+        .orderBy("window_start")
     }
-    val sentinelDir = Files.createTempDirectory("q116_sentinel")
-    spark.createDataFrame(
-        java.util.Arrays.asList(Row(sentinelVals.toIndexedSeq: _*)), schema)
-      .coalesce(1).write.mode("overwrite").parquet(sentinelDir.toString)
-    listDir(sentinelDir).filter(_.toString.endsWith(".parquet"))
-      .foreach(p => Files.copy(p, dir.resolve("zz_sentinel.parquet")))
-
-    val pairs = graft.Tables.normalizeTs(
-        spark.readStream.schema(schema).parquet(dir.toString))
-      .select(col("ts"), col("user_id"))
-      .withWatermark("ts", "1 second")
-      .groupBy(window(col("ts"), "60 seconds", "20 seconds"), col("user_id"))
-      .agg(count(lit(1)).as("n"))
-
-    // Per-batch finish: count each closing window's flushed pairs with a
-    // BATCH aggregation (see the operator doc above for why this is
-    // exact). Keyed by batchId so a replayed/retried batch overwrites
-    // its own rows instead of double-counting; the collected frames are
-    // output-sized (one row per closed window), the same rows the
-    // memory sink used to buffer.
-    val batches =
-      new java.util.concurrent.ConcurrentHashMap[Long, Array[Row]]()
-    withStatePartitions(spark) {
-      val query = pairs.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val rows = batch.groupBy(col("window"))
-            .agg(count(lit(1)).as("n_users"), sum(col("n")).as("n_events"))
-            .select(col("window.start").cast("long").as("window_start"),
-              col("n_users"), col("n_events"))
-            .collect()
-          batches.put(batchId, rows)
-          ()
-        }
-        .start()
-      try {
-        query.processAllAvailable()
-        dumpStreamPlan("q116_stream_distinct", query)
-      } finally {
-        query.stop()
-        deleteRecursively(dir.toFile) // output lives in `batches`
-        deleteRecursively(sentinelDir.toFile)
-      }
-    }
-
-    import scala.jdk.CollectionConverters._
-    val outSchema = StructType(Seq(
-      org.apache.spark.sql.types.StructField("window_start",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_users",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_events",
-        org.apache.spark.sql.types.LongType)))
-    spark.createDataFrame(
-        batches.values.asScala.flatten.toSeq.asJava, outSchema)
-      .filter(col("window_start") <= realMaxSec) // drop sentinel windows
-      .orderBy("window_start")
-  }
 
   /** q123 — streaming exact dedup via `dropDuplicatesWithinWatermark`:
     * the STATE-BOUNDED streaming dedup primitive (Spark's answer to an
@@ -1916,46 +1433,23 @@ object StreamParity {
     * records later than that bound, exactly as the reference's
     * bounded-out-of-orderness watermark contract specifies.
     */
-  def q123StreamDedupWatermark(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = graft.Tables.events(spark, sfDir).select(col("ts"), col("user_id"))
-    // Ingest layout: ReplayFiles ts-range files, mtimes ascending in range
-    // order, so maxFilesPerTrigger=1 replays the stream in time order
-    // (same dance as q58) — the dedup state is exercised ACROSS batches.
-    val dir = Files.createTempDirectory("q123_dedup")
-    ev.repartitionByRange(ReplayFiles, col("ts")).sortWithinPartitions("ts")
-      .write.mode("overwrite").parquet(dir.toString)
-    val t0 = System.currentTimeMillis() - 3600L * 1000
-    new java.io.File(dir.toString).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .zipWithIndex.foreach { case (f, i) =>
-        require(f.setLastModified(t0 + i * 10000L)) }
-
-    val schema = spark.read.parquet(dir.toString).schema
-    val deduped = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      .withColumn("minute_start",
-        (unix_micros(col("ts")) / 60000000L).cast("long") * 60)
-      .withWatermark("ts", "2 hours")
-      .dropDuplicatesWithinWatermark("user_id", "minute_start")
-      .select(col("user_id"), col("minute_start"))
-
-    val table = s"q123_dedup_${runId.incrementAndGet()}"
-    // watermark-bounded dedup state on the RocksDB provider — with the
-    // q71/q94 flips every stateful shape in the suite (windowed agg,
-    // session windows, dedup-within-watermark, fMGWS, transformWithState,
-    // stream-stream joins) runs on the scale backend somewhere.
-    withRocksDBProvider(spark) {
-      val query = deduped.writeStream.outputMode("append")
-        .format("memory").queryName(table).start()
-      try query.processAllAvailable()
-      finally {
-        query.stop()
-        deleteRecursively(dir.toFile) // output lives in the memory sink
-      }
+  def q123StreamDedupWatermark(spark: SparkSession, sfDir: String): DataFrame =
+    Replay(spark, "q123_dedup") { r =>
+      // Ingest layout: ReplayFiles ts-range files replayed in time order
+      // — the dedup state is exercised ACROSS batches.
+      val ev = graft.Tables.events(spark, sfDir).select(col("ts"), col("user_id"))
+      val deduped = r.source(r.stage(ev, "ts"), ev.schema)
+        .withColumn("minute_start",
+          (unix_micros(col("ts")) / 60000000L).cast("long") * 60)
+        .withWatermark("ts", "2 hours")
+        .dropDuplicatesWithinWatermark("user_id", "minute_start")
+        .select(col("user_id"), col("minute_start"))
+      // watermark-bounded dedup state on the RocksDB provider — with the
+      // q71/q94 flips every stateful shape in the suite (windowed agg,
+      // session windows, dedup-within-watermark, fMGWS, transformWithState,
+      // stream-stream joins) runs on the scale backend somewhere.
+      r.memory(deduped, rocksDB = true).orderBy("user_id", "minute_start")
     }
-
-    drainMemorySink(spark, table).orderBy("user_id", "minute_start")
-  }
 
   val q123Sql: String =
     """SELECT DISTINCT user_id,
@@ -2017,68 +1511,6 @@ object StreamParity {
     * row-for-row across the 4-batch ts-range replay.
     */
 
-  /** Shared replay harness for the transformWithState operators
-    * (q126/q130/q137/q140): lays `ev` out as nFiles ts_us-range files
-    * replayed oldest-first (one per trigger), swaps in the RocksDB
-    * provider the typed-state API requires, runs `build`'s streaming
-    * Dataset to a memory sink, and cleans up — the input copy is
-    * deleted and the provider restored whether the query succeeds or
-    * not (the memory sink holds the committed rows, so the files are
-    * not needed after processAllAvailable returns). */
-  private[streaming] def replayTyped(spark: SparkSession, ev: DataFrame,
-      prefix: String, nFiles: Int = ReplayFiles)
-      (build: DataFrame => org.apache.spark.sql.Dataset[_]): DataFrame = {
-    val dir = Files.createTempDirectory(prefix)
-    ev.repartitionByRange(nFiles, col("ts_us")).sortWithinPartitions("ts_us")
-      .write.mode("overwrite").parquet(dir.toString)
-    val t0 = System.currentTimeMillis() - 3600L * 1000
-    new java.io.File(dir.toString).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .zipWithIndex.foreach { case (f, i) =>
-        require(f.setLastModified(t0 + i * 10000L)) }
-
-    try withRocksDBProvider(spark) {
-      val schema = spark.read.parquet(dir.toString).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      val table = s"${prefix}_${runId.incrementAndGet()}"
-      val query = build(stream).writeStream.outputMode("append")
-        .format("memory").queryName(table).start()
-      try query.processAllAvailable()
-      finally query.stop()
-      drainMemorySink(spark, table)
-    } finally deleteRecursively(dir.toFile)
-  }
-
-  /** Drain a finished memory-sink table into a session-GC-able frame
-    * and DROP the temp view: a memory sink otherwise pins its full
-    * result set in the driver catalog for the session's lifetime — one
-    * corpus-sized runId-suffixed table per invocation in the long-lived
-    * bench JVM. localCheckpoint(eager) copies the rows into block
-    * storage that the ContextCleaner frees once the frame is GC'd; the
-    * view (and the sink buffer it references) is dropped immediately. */
-  private def drainMemorySink(spark: SparkSession, table: String): DataFrame = {
-    val out = spark.table(table).localCheckpoint(true)
-    spark.catalog.dropTempView(table)
-    out
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(); ()
-  }
-
-  /** java.nio Files.list holds a directory fd until the stream is
-    * CLOSED (not until GC): the long-lived bench/spec JVM reuses these
-    * harness paths repeatedly, so unclosed streams leak fds. Always
-    * list through this eagerly-materializing, closing wrapper. */
-  private def listDir(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
-    val s = Files.list(dir)
-    try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator())
-      .asScala.toList
-    finally s.close()
-  }
-
   def q126TransformWithState(spark: SparkSession, sfDir: String): DataFrame =
     q126WithSplit(spark, sfDir, ReplayFiles)
 
@@ -2090,15 +1522,16 @@ object StreamParity {
       nFiles: Int): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import spark.implicits._
-    val ev = graft.Tables.events(spark, sfDir)
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"), col("event_type"))
-    replayTyped(spark, ev, "q126_tws", nFiles) { stream =>
-      stream.as[SeqEv]
-        .groupByKey(_.user_id)
-        .transformWithState(new RunningSeqProcessor,
-          TimeMode.None(), OutputMode.Append())
-    }.orderBy("event_id")
+    Replay(spark, "q126_tws") { r =>
+      val ev = graft.Tables.events(spark, sfDir)
+        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+          col("event_id"), col("event_type"))
+      r.memory(r.source(r.stage(ev, "ts_us", nFiles), ev.schema).as[SeqEv]
+          .groupByKey(_.user_id)
+          .transformWithState(new RunningSeqProcessor,
+            TimeMode.None(), OutputMode.Append()),
+        rocksDB = true).orderBy("event_id")
+    }
   }
 
   val q126Sql: String =
@@ -2149,7 +1582,7 @@ object StreamParity {
     }
   }
 
-  /** q130 — q126's replay harness (ts-range batches, RocksDB provider)
+  /** q130 — q126's replay (ts-range batches, RocksDB provider)
     * driving the [[RecentHistoryProcessor]]: exercises the ListState
     * surface of Spark 4's transformWithState, the state primitive for
     * bounded per-key sequences. Oracle: the batch sliding window
@@ -2158,15 +1591,16 @@ object StreamParity {
   def q130StreamRecentHistory(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import spark.implicits._
-    val ev = graft.Tables.events(spark, sfDir)
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"), col("event_type"))
-    replayTyped(spark, ev, "q130_hist") { stream =>
-      stream.as[HistEv]
-        .groupByKey(_.user_id)
-        .transformWithState(new RecentHistoryProcessor,
-          TimeMode.None(), OutputMode.Append())
-    }.orderBy("event_id")
+    Replay(spark, "q130_hist") { r =>
+      val ev = graft.Tables.events(spark, sfDir)
+        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+          col("event_id"), col("event_type"))
+      r.memory(r.source(r.stage(ev, "ts_us"), ev.schema).as[HistEv]
+          .groupByKey(_.user_id)
+          .transformWithState(new RecentHistoryProcessor,
+            TimeMode.None(), OutputMode.Append()),
+        rocksDB = true).orderBy("event_id")
+    }
   }
 
   val q130Sql: String =
@@ -2216,21 +1650,22 @@ object StreamParity {
     }
   }
 
-  /** q137 — the q126 replay harness driving [[DailyQuotaProcessor]]:
+  /** q137 — the q126 replay driving [[DailyQuotaProcessor]]:
     * per-key throttling through transformWithState, held to the batch
     * ROW_NUMBER-per-(user, day) oracle. */
   def q137StreamQuotaGate(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import spark.implicits._
-    val ev = graft.Tables.events(spark, sfDir)
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"))
-    replayTyped(spark, ev, "q137_quota") { stream =>
-      stream.as[QuotaEv]
-        .groupByKey(_.user_id)
-        .transformWithState(new DailyQuotaProcessor,
-          TimeMode.None(), OutputMode.Append())
-    }.orderBy("event_id")
+    Replay(spark, "q137_quota") { r =>
+      val ev = graft.Tables.events(spark, sfDir)
+        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+          col("event_id"))
+      r.memory(r.source(r.stage(ev, "ts_us"), ev.schema).as[QuotaEv]
+          .groupByKey(_.user_id)
+          .transformWithState(new DailyQuotaProcessor,
+            TimeMode.None(), OutputMode.Append()),
+        rocksDB = true).orderBy("event_id")
+    }
   }
 
   val q137Sql: String =
@@ -2274,21 +1709,22 @@ object StreamParity {
     }
   }
 
-  /** q140 — the q126 replay harness driving [[TypeSeqProcessor]]: the
+  /** q140 — the q126 replay driving [[TypeSeqProcessor]]: the
     * MapState surface of Spark 4's transformWithState, held to the
     * batch per-(user, type) ROW_NUMBER oracle. */
   def q140StreamTypeSeq(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import spark.implicits._
-    val ev = graft.Tables.events(spark, sfDir)
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"), col("event_type"))
-    replayTyped(spark, ev, "q140_typeseq") { stream =>
-      stream.as[TypeSeqEv]
-        .groupByKey(_.user_id)
-        .transformWithState(new TypeSeqProcessor,
-          TimeMode.None(), OutputMode.Append())
-    }.orderBy("event_id")
+    Replay(spark, "q140_typeseq") { r =>
+      val ev = graft.Tables.events(spark, sfDir)
+        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+          col("event_id"), col("event_type"))
+      r.memory(r.source(r.stage(ev, "ts_us"), ev.schema).as[TypeSeqEv]
+          .groupByKey(_.user_id)
+          .transformWithState(new TypeSeqProcessor,
+            TimeMode.None(), OutputMode.Append()),
+        rocksDB = true).orderBy("event_id")
+    }
   }
 
   val q140Sql: String =
@@ -2368,65 +1804,24 @@ object StreamParity {
     * the q71 file replay (ts-range batches + sentinel file to advance
     * the final watermark) driving [[TimerSessionProcessor]] under
     * TimeMode.EventTime. Held to the batch gaps-and-islands oracle. */
-  def q141StreamTimerSessions(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    val schema = raw.schema
-    val sentinelTs = sentinelTsPlus1h(raw)
-
-    val dir = Files.createTempDirectory("q141_sessions")
-    raw.repartitionByRange(ReplayFiles, col("ts")).sortWithinPartitions("ts")
-      .write.mode("overwrite").parquet(dir.toString)
-    val t0 = System.currentTimeMillis() - 3600L * 1000
-    val parts = new java.io.File(dir.toString).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    parts.zipWithIndex.foreach { case (f, i) =>
-      require(f.setLastModified(t0 + i * 10000L)) }
-    val sentinelVals = schema.fields.map { f =>
-      f.name match {
-        case "ts"      => sentinelTs
-        case "user_id" => -1L
-        case "value"   => 0.0
-        case _         => null
-      }
-    }
-    val sentinelDir = Files.createTempDirectory("q141_sentinel")
-    spark.createDataFrame(
-        java.util.Arrays.asList(Row(sentinelVals.toIndexedSeq: _*)), schema)
-      .coalesce(1).write.mode("overwrite").parquet(sentinelDir.toString)
-    val sentinelTarget = dir.resolve("zz_sentinel.parquet")
-    listDir(sentinelDir).filter(_.toString.endsWith(".parquet"))
-      .foreach(p => Files.copy(p, sentinelTarget))
-    require(sentinelTarget.toFile.setLastModified(t0 + parts.length * 10000L))
-
-    // One provider-swap implementation (withRocksDBProvider) — the
-    // inline copy this replaced also forfeited the helper's
-    // shuffle-partition pinning, the dominant per-trigger RocksDB
-    // open/commit cost (measured 6.2 -> 4.6 s in the helper's doc).
-    try withRocksDBProvider(spark) {
-      val out = graft.Tables.normalizeTs(spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir.toString))
+  def q141StreamTimerSessions(spark: SparkSession, sfDir: String): DataFrame =
+    Replay(spark, "q141_sessions") { r =>
+      import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+      import spark.implicits._
+      val raw = r.events(sfDir)
+      val dir = r.stage(raw, "ts")
+      r.sentinel(dir, raw, "user_id" -> -1L, "value" -> 0.0)
+      val out = graft.Tables.normalizeTs(r.source(dir, raw.schema))
         .withWatermark("ts", "1 second")
         .select(col("user_id"), unix_micros(col("ts")).as("ts_us"))
         .as[TimerEv]
         .groupByKey(_.user_id)
         .transformWithState(new TimerSessionProcessor,
           TimeMode.EventTime(), OutputMode.Append())
-      val table = s"q141_sessions_${runId.incrementAndGet()}"
-      val query = out.writeStream.outputMode("append")
-        .format("memory").queryName(table).start()
-      try query.processAllAvailable()
-      finally query.stop()
-      drainMemorySink(spark, table)
+      r.memory(out, rocksDB = true)
         .filter(col("user_id") =!= -1L)
         .orderBy("user_id", "start_us")
-    } finally {
-      deleteRecursively(dir.toFile) // corpus-sized replay copies
-      deleteRecursively(sentinelDir.toFile)
     }
-  }
 
   /** q148 — dead-letter routing rule: suspicious telemetry values. */
   private val DlqRule = "value > 95"
@@ -2447,26 +1842,13 @@ object StreamParity {
     * routing verdict table read back from BOTH sinks, so the oracle
     * checks completeness (no row lost), disjointness, and rule
     * fidelity in one comparison. */
-  def q148StreamDlqSplit(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = graft.Tables.events(spark, sfDir)
-      .select(col("event_id"), col("user_id"), col("value"),
-        unix_micros(col("ts")).as("ts_us"))
-    val dir = Files.createTempDirectory("q148_in")
-    ev.repartitionByRange(ReplayFiles, col("ts_us")).sortWithinPartitions("ts_us")
-      .write.mode("overwrite").parquet(dir.toString)
-    val t0 = System.currentTimeMillis() - 3600L * 1000
-    new java.io.File(dir.toString).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .zipWithIndex.foreach { case (f, i) =>
-        require(f.setLastModified(t0 + i * 10000L)) }
-    val mainDir = Files.createTempDirectory("q148_main")
-    val dlqDir  = Files.createTempDirectory("q148_dlq")
-
-    val schema = spark.read.parquet(dir.toString).schema
-    val query = withStatePartitions(spark) { spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
+  def q148StreamDlqSplit(spark: SparkSession, sfDir: String): DataFrame =
+    Replay(spark, "q148") { r =>
+      val ev = graft.Tables.events(spark, sfDir)
+        .select(col("event_id"), col("user_id"), col("value"),
+          unix_micros(col("ts")).as("ts_us"))
+      val (mainDir, dlqDir) = (r.dir("main"), r.dir("dlq"))
+      r.foreachBatch(r.source(r.stage(ev, "ts_us"), ev.schema)) { (batch, batchId) =>
         val b = batch.persist() // ONE source scan feeds both routes
         // coalesce the rule under NULL: a NULL value must route to main
         // (the oracle's CASE does), never vanish from both sinks
@@ -2482,26 +1864,12 @@ object StreamParity {
             .write.mode("overwrite").parquet(s"$dlqDir/b$batchId")
         } finally { b.unpersist(); () }
       }
-      .start() }
-    try query.processAllAvailable()
-    finally {
-      query.stop()
-      deleteRecursively(dir.toFile) // corpus-sized input copy
+      spark.read.parquet(s"$mainDir/b*")
+        .withColumn("sink", lit("main"))
+        .unionByName(
+          spark.read.parquet(s"$dlqDir/b*").withColumn("sink", lit("dlq")))
+        .orderBy("event_id")
     }
-
-    // Materialize eagerly (localCheckpoint severs the lineage to the sink
-    // parquet) so BOTH temp sinks can be deleted before returning — the
-    // lazily-read form leaked two corpus-derived directories per run.
-    val out = spark.read.parquet(s"$mainDir/b*")
-      .withColumn("sink", lit("main"))
-      .unionByName(
-        spark.read.parquet(s"$dlqDir/b*").withColumn("sink", lit("dlq")))
-      .orderBy("event_id")
-      .localCheckpoint(true)
-    deleteRecursively(mainDir.toFile)
-    deleteRecursively(dlqDir.toFile)
-    out
-  }
 
   val q148Sql: String =
     """SELECT event_id, user_id,
@@ -2549,27 +1917,14 @@ object StreamParity {
     * first event, conversion, and horizon contribution routinely land
     * in DIFFERENT triggers — the min/max merge is genuinely exercised,
     * not incidentally trivial. */
-  def q245StreamKmSurvival(spark: SparkSession, sfDir: String): DataFrame = {
-    // legacy conf before the raw read (nanos-generation safety; see q81)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
-    val dir = Files.createTempDirectory("q245_events")
-    raw.repartitionByRange(4, col("ts")).sortWithinPartitions("ts")
-      .write.mode("overwrite").parquet(dir.toString)
-    val t0 = System.currentTimeMillis() - 3600L * 1000
-    new java.io.File(dir.toString).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .zipWithIndex.foreach { case (f, i) =>
-        require(f.setLastModified(t0 + i * 10000L)) }
-
-    val outRoot = Files.createTempDirectory("q245_ledger").toString
-    val ledger = new StampedLedger(outRoot)
-    val query = withStatePartitions(spark) { graft.Tables.normalizeTs(
-        spark.readStream.schema(raw.schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir.toString))
-      .selectExpr("user_id", "unix_micros(ts) AS us", "event_type")
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+  def q245StreamKmSurvival(spark: SparkSession, sfDir: String): DataFrame =
+    Replay(spark, "q245") { r =>
+      val raw = r.events(sfDir)
+      val ledger = r.ledger()
+      val stream = graft.Tables.normalizeTs(
+          r.source(r.stage(raw, "ts", files = 4), raw.schema))
+        .selectExpr("user_id", "unix_micros(ts) AS us", "event_type")
+      r.foreachBatch(stream) { (batch, batchId) =>
         ledger.fold(batchId) { stamp =>
           val s = batch.sparkSession
           val batchLedger = batch.groupBy(col("user_id"))
@@ -2587,24 +1942,13 @@ object StreamParity {
           }
           folded.write.mode("overwrite").parquet(stamp)
         }
-        ()
-      }.start() }
-    try query.processAllAvailable()
-    finally {
-      query.stop()
-      deleteRecursively(dir.toFile)
-    }
-    val perUser = ledger.previousPath.map(p => spark.read.parquet(p))
-      .getOrElse(sys.error("q245: no ledger written"))
-    val horizon = perUser.agg(max(col("last_us")).as("h"))
-    val out = graft.operators.Relational.kmFromPerUser(
+      }
+      val perUser = r.read(ledger)
+      val horizon = perUser.agg(max(col("last_us")).as("h"))
+      graft.operators.Relational.kmFromPerUser(
         perUser.select(col("user_id"), col("first_us"), col("conv_us")),
         horizon)
-      .localCheckpoint(true)
-    ledger.close()
-    deleteRecursively(new java.io.File(outRoot)) // the (now empty) root
-    out
-  }
+    }
 
   /** q251 — EXACT global ntile over a CONTINUOUSLY INGESTING corpus:
     * q88/q232's length bucketing as a streaming fold, completing the
@@ -2636,33 +1980,15 @@ object StreamParity {
     * discipline q232 documents); the bucket overlap join is
     * keys × k ≈ 10^4 rows. No doc-scale sort, window, or collect
     * anywhere. */
-  def q251StreamNtile(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.operators.Curation.LenBuckets
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val dir = Files.createTempDirectory("q251_docs")
-    docs.repartitionByRange(ReplayFiles, col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .write.mode("overwrite").parquet(dir.toString)
-    val t0 = System.currentTimeMillis() - 3600L * 1000
-    new java.io.File(dir.toString).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .zipWithIndex.foreach { case (f, i) =>
-        require(f.setLastModified(t0 + i * 10000L)) }
+  def q251StreamNtile(spark: SparkSession, sfDir: String): DataFrame =
+    Replay(spark, "q251") { r =>
+      import graft.operators.Curation.LenBuckets
+      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+        .select(col("doc_id"), col("text"))
+      val ledger = r.ledger()
+      val countSchema = StructType.fromDDL("tok_cnt BIGINT, cnt BIGINT")
 
-    val outRoot = Files.createTempDirectory("q251_counts").toString
-    val ledger = new StampedLedger(outRoot)
-    val countSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("tok_cnt",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("cnt",
-        org.apache.spark.sql.types.LongType)))
-
-    val schema = spark.read.parquet(dir.toString).schema
-    val query = withStatePartitions(spark) { spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      r.foreachBatch(r.source(r.stage(docs, "doc_id"), docs.schema)) { (batch, batchId) =>
         ledger.fold(batchId) { stamp =>
           val s = batch.sparkSession
           // the ONLY aggregation is over the batch's own rows; the
@@ -2680,45 +2006,34 @@ object StreamParity {
                 .as("cnt"))
           folded.write.mode("overwrite").parquet(stamp)
         }
-        ()
-      }.start() }
-    try query.processAllAvailable()
-    finally {
-      query.stop()
-      deleteRecursively(dir.toFile)
-    }
+      }
 
-    // End-of-stream bucketing over the folded key-cardinality table.
-    // The re-aggregation makes the prefix window's child an Aggregate —
-    // the bounded-frame shape the global-window plan gate admits.
-    val counts = ledger.previousPath.map(p => spark.read.parquet(p))
-      .getOrElse(sys.error("q251: no count table written"))
-      .groupBy(col("tok_cnt")).agg(sum(col("cnt")).as("cnt"))
-    val offs = counts.withColumn("off",
-      sum(col("cnt")).over(org.apache.spark.sql.expressions.Window
-        .orderBy(col("tok_cnt"))) - col("cnt"))
-    val total = counts.agg(sum(col("cnt")).as("n"))
-    val out = offs.crossJoin(broadcast(total))
-      .select(col("tok_cnt"), col("cnt"), col("off"), col("n"),
-        explode(expr(s"sequence(1L, ${LenBuckets}L)")).as("bucket"))
-      .withColumn("q", expr(s"n div $LenBuckets"))
-      .withColumn("r", expr(s"n % $LenBuckets"))
-      // bucket b spans ranks (s_b, e_b]; the value spans (off, off+cnt];
-      // both half-open, so the overlap is the plain interval intersection
-      .withColumn("s_b", expr("(bucket - 1) * q + least(bucket - 1, r)"))
-      .withColumn("e_b", expr("bucket * q + least(bucket, r)"))
-      .withColumn("ov", expr(
-        "greatest(0L, least(e_b, off + cnt) - greatest(s_b, off))"))
-      .filter(col("ov") > 0)
-      .groupBy(col("bucket"))
-      .agg(sum(col("ov")).as("n_docs"),
-        min(col("tok_cnt")).as("min_toks"),
-        max(col("tok_cnt")).as("max_toks"),
-        sum(col("tok_cnt") * col("ov")).as("sum_toks"))
-      .orderBy("bucket")
-      .localCheckpoint(true)
-    ledger.close()
-    deleteRecursively(new java.io.File(outRoot)) // the (now empty) root
-    out
-  }
+      // End-of-stream bucketing over the folded key-cardinality table.
+      // The re-aggregation makes the prefix window's child an Aggregate —
+      // the bounded-frame shape the global-window plan gate admits.
+      val counts = r.read(ledger)
+        .groupBy(col("tok_cnt")).agg(sum(col("cnt")).as("cnt"))
+      val offs = counts.withColumn("off",
+        sum(col("cnt")).over(org.apache.spark.sql.expressions.Window
+          .orderBy(col("tok_cnt"))) - col("cnt"))
+      val total = counts.agg(sum(col("cnt")).as("n"))
+      offs.crossJoin(broadcast(total))
+        .select(col("tok_cnt"), col("cnt"), col("off"), col("n"),
+          explode(expr(s"sequence(1L, ${LenBuckets}L)")).as("bucket"))
+        .withColumn("q", expr(s"n div $LenBuckets"))
+        .withColumn("r", expr(s"n % $LenBuckets"))
+        // bucket b spans ranks (s_b, e_b]; the value spans (off, off+cnt];
+        // both half-open, so the overlap is the plain interval intersection
+        .withColumn("s_b", expr("(bucket - 1) * q + least(bucket - 1, r)"))
+        .withColumn("e_b", expr("bucket * q + least(bucket, r)"))
+        .withColumn("ov", expr(
+          "greatest(0L, least(e_b, off + cnt) - greatest(s_b, off))"))
+        .filter(col("ov") > 0)
+        .groupBy(col("bucket"))
+        .agg(sum(col("ov")).as("n_docs"),
+          min(col("tok_cnt")).as("min_toks"),
+          max(col("tok_cnt")).as("max_toks"),
+          sum(col("tok_cnt") * col("ov")).as("sum_toks"))
+        .orderBy("bucket")
+    }
 }

@@ -278,9 +278,10 @@ object ScaleProbe {
         .parquet(droot.resolve("documents.parquet").toString)
     }
     println(s"[recall] q21 corpus ${nDocs * needK} docs (K=$needK) at $droot" +
-      s" — two-level switch at ${16L << 16} docs")
-    // The exactness statement at above-switch volume: the two-level
-    // pigeonhole (the branch the big corpus auto-selects) must return
+      s" — two-level switch at ${Dedup.SimOccupancy << 16} docs")
+    // The exactness statement at 1M-doc volume: the two-level pigeonhole
+    // (forced here — this corpus sits below the switch, so it
+    // auto-selects single-level; q21WithLevel pins each level) must return
     // the IDENTICAL pair set as the single-level banding — the shape
     // every tested SF runs and the oracle verifies — over the same
     // 1M-doc corpus. (A shifted-union-of-1x expectation does NOT hold
